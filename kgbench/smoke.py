@@ -2,7 +2,10 @@
 and traced, runs every output check and prints exactly the metrics
 BENCHMARK.json declares.  Takes a few minutes (four Spark sessions).
 
-    python3 -m pytest kgbench/test_smoke.py -q
+    python3 -m pytest kgbench/smoke.py -q
+
+The file name is outside pytest's test_*.py pattern, so a plain
+`python -m pytest` from the repository root does not collect it.
 """
 
 from __future__ import annotations

@@ -53,9 +53,10 @@ class RssSampler:
     below it (the Python worker daemon and its forked workers) on a
     background thread; `peak_mb` is the largest sum seen."""
 
-    def __init__(self, jvm_pid: int, interval_s: float = 0.2):
+    INTERVAL_S = 0.2
+
+    def __init__(self, jvm_pid: int):
         self.jvm_pid = jvm_pid
-        self.interval_s = interval_s
         self.peak = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -67,7 +68,7 @@ class RssSampler:
     def _run(self) -> None:
         while not self._stop.is_set():
             self._sample()
-            self._stop.wait(self.interval_s)
+            self._stop.wait(self.INTERVAL_S)
 
     def __enter__(self) -> RssSampler:
         self._thread.start()
