@@ -4,21 +4,17 @@ each call so a span holds that layer's work and nothing downstream.
 
 Every layer runs in its own `setJobGroup`; the status tracker gives
 its jobs, tasks and failed tasks, and the Spark event log (enabled for
-traced runs only, see run.py) its shuffle and spill bytes.  Each
-workload walks the layers its end-to-end metrics depend on, over its
-own seeded corpus:
+traced runs only, see run.py) its shuffle and spill bytes.  Every
+traced run, whatever its workload, walks the same layers over its own
+seeded corpus, so each prints every per-layer metric:
 
-  full_build         after the same warm-up build as its untraced run:
-                     staged build (sources .. validate), fused build and
-                     recrawl (pipeline), one build at local[1] (scaling)
-  serve_annotations  materialized build + resume (resume) as the first
-                     build of the session, as a batch run meets it, then
-                     annotation queries on its triples (graphquery,
-                     sparql).  No warm-up build: the build_kg that gives
-                     the reference triples runs afterwards instead, which
-                     keeps the walk within the time one run may take
+  after a warm-up build: staged build (sources .. validate), fused
+  build (pipeline), annotation queries on the fused build's stored
+  triples (graphquery, sparql), recrawl (pipeline), and one build of
+  the recrawl snapshot at local[1] (scaling)
 
-One walk over every layer takes longer than one run may.
+`run_pipeline` (the materialized path with lineage and resume) is not
+walked: it takes 40-70 s, more than a traced run has left.
 """
 
 from __future__ import annotations
@@ -54,26 +50,22 @@ from ferenda_spark.operators.mentions import detect_mentions, mention_target_uri
 from ferenda_spark.operators.relate import relate_edges
 from ferenda_spark.operators.segment import segment_sections
 from ferenda_spark.operators.sparql import parse_sparql, run_sparql
-from ferenda_spark.pipeline import KGState, build_kg, incremental_kg, kg_state, run_pipeline
+from ferenda_spark.pipeline import KGState, build_kg, incremental_kg, kg_state
 from ferenda_spark.session import get_spark
 from ferenda_spark.sources.pages import read_table, synth_pages_v2
-from ferenda_spark.streaming.resume import read_lineage
 
 import sysmon
 from workloads import ANNOTATIONS_RQ, digest, expected_annotations, log, write_pages
 
-LAYERS = {
-    "full_build": (
-        "sources", "extract", "segment", "mentions", "link", "emit",
-        "canonicalize", "relate", "validate", "pipeline",
-    ),
-    "serve_annotations": ("resume", "graphquery", "sparql"),
-}
+LAYERS = (
+    "sources", "extract", "segment", "mentions", "link", "emit",
+    "canonicalize", "relate", "validate", "pipeline", "graphquery", "sparql",
+)
 STATE_TABLES = (
     "fingerprints", "docs", "segments", "mentions", "labels", "canon", "triples", "edges",
 )
 #: queries timed through the sparql layer (parse / compile / execute)
-TRACE_QUERIES = 3
+TRACE_QUERIES = 2
 
 
 class Tracer:
@@ -245,9 +237,10 @@ def _staged_build(tr: Tracer, spark, pages_path: str, cfg: PipelineConfig, ref, 
 
 def _recrawl(tr: Tracer, spark, work: Path, kg, pages_path: str, docs: int, seed: int, tally):
     """incremental_kg over the stored 8-table state of the fused build
-    against a snapshot with every 50th doc revised and docs/50 new;
-    its delta and its triples are checked against the snapshot and
-    against a full build_kg of it."""
+    against a snapshot with every 50th doc revised and docs/50 new; its
+    delta is checked against the snapshot.  Returns the snapshot's path
+    and the digest of incremental_kg's triples, which the local[1]
+    build_kg of the snapshot must reproduce."""
     state = kg_state(read_table(spark, pages_path), kg)
     for name in STATE_TABLES:
         getattr(state, name).write.mode("overwrite").parquet(str(work / "state" / name))
@@ -272,7 +265,7 @@ def _recrawl(tr: Tracer, spark, work: Path, kg, pages_path: str, docs: int, seed
     tally.record(n_delta == revised + n_new, f"recrawl delta {n_delta} != {revised} + {n_new}")
     got = digest(kg2.triples)
     kg2.release()
-    tally.record(got == reference_digest(spark, v2), "incremental_kg triples != build_kg of v2")
+    return v2, got
 
 
 def reference_digest(spark, pages_path: str) -> tuple[int, int]:
@@ -284,44 +277,10 @@ def reference_digest(spark, pages_path: str) -> tuple[int, int]:
     return ref
 
 
-def _materialize(tr: Tracer, spark, work: Path, pages_path: str, tally) -> DataFrame:
-    """run_pipeline into a fresh directory, the per-stage lineage read
-    back, then a second run that must skip every stage; both runs'
-    triples must equal build_kg's."""
-    out = work / "materialized"
-    with tr.span("resume", "run_s"):
-        res = run_pipeline(spark, read_table(spark, pages_path), str(out))
-        res.triples.count()
-    got = digest(res.triples)
-    lineage = read_lineage(spark, str(out / "lineage"))
-    for r in lineage.groupBy("stage").agg(
-        F.min("started").alias("t0"), F.max("finished").alias("t1")
-    ).collect():
-        tr.put(f"resume.{r['stage']}_s", (r["t1"] - r["t0"]).total_seconds(), "s")
-    n_lineage = lineage.count()
-    tr.put("resume.lineage_rows", n_lineage, "count")
-    files = [Path(d) / f for d, _, fs in os.walk(out) for f in fs if f.endswith(".parquet")]
-    tr.put("resume.files_written", len(files), "count")
-    tr.put("resume.bytes_written", sum(f.stat().st_size for f in files), "bytes")
-    with tr.span("resume", "noop_s"):
-        again = run_pipeline(spark, read_table(spark, pages_path), str(out))
-        again.triples.count()
-    # a fully committed directory: every stage skipped, nothing recomputed
-    tally.record(
-        read_lineage(spark, str(out / "lineage")).count() == n_lineage,
-        "no-op run_pipeline added lineage rows",
-    )
-    ref = reference_digest(spark, pages_path)
-    tally.record(got == ref, "run_pipeline triples != build_kg triples")
-    tally.record(
-        digest(again.triples) == ref, "no-op run_pipeline triples != build_kg triples"
-    )
-    return read_table(spark, str(out / "triples"))
-
-
 def _queries(tr: Tracer, spark, store: DataFrame, seed: int, tally) -> None:
-    """The annotation CONSTRUCT for a few seeded doc URIs, first
-    untraced, then with parse / compile / execute timed apart."""
+    """The annotation CONSTRUCT for a few seeded doc URIs, with parse /
+    compile / execute timed apart; each result is checked against the
+    native operator."""
     with tr.span("graphquery", "pred_stats_s"):
         stats = pred_stats(store)
     uris = sorted(
@@ -330,12 +289,7 @@ def _queries(tr: Tracer, spark, store: DataFrame, seed: int, tally) -> None:
     )
     draws = random.Random(seed).sample(uris, min(TRACE_QUERIES, len(uris)))
     expected = expected_annotations(store, set(draws))
-    untraced = []
-    for u in draws:
-        t0 = time.perf_counter()
-        run_sparql(store, ANNOTATIONS_RQ, params={"uri": u}, stats=stats).collect()
-        untraced.append(time.perf_counter() - t0)
-    parse, compile_, execute, rows_out, traced = [], [], [], [], []
+    parse, compile_, execute, rows_out = [], [], [], []
     for u in draws:
         with tr.group("sparql"):
             t0 = time.perf_counter()
@@ -348,7 +302,6 @@ def _queries(tr: Tracer, spark, store: DataFrame, seed: int, tally) -> None:
         parse.append((t1 - t0) * 1e3)
         compile_.append((t2 - t1) * 1e3)
         execute.append((t3 - t2) * 1e3)
-        traced.append(t3 - t0)
         rows_out.append(len(rows))
         got = {(r["subj"], r["pred"], r["obj"]) for r in rows}
         tally.record(got == expected[u], f"annotations.rq != native for {u}")
@@ -356,9 +309,6 @@ def _queries(tr: Tracer, spark, store: DataFrame, seed: int, tally) -> None:
     tr.put("sparql.compile_ms", statistics.median(compile_), "ms")
     tr.put("sparql.execute_ms", statistics.median(execute), "ms")
     tr.put("sparql.rows_out", statistics.median(rows_out), "count")
-    tr.put(
-        "trace.overhead_s", statistics.median(traced) - statistics.median(untraced), "s"
-    )
 
 
 def _event_metrics(tr: Tracer, work: Path, layers) -> None:
@@ -369,68 +319,60 @@ def _event_metrics(tr: Tracer, work: Path, layers) -> None:
         tr.put(f"{layer}.spill_mb", v["spill"] / 2**20, "MB")
 
 
-def _walk_build(tr: Tracer, spark, work: Path, pages_path: str, scale, seed, ref, tally, cpus):
+def walk(spark, work: Path, seed: int, scale, tally, cpus: int) -> dict:
+    """The traced walk; stops `spark` (and the local[1] session it
+    starts) before returning the per-layer metrics."""
+    tr = Tracer(spark)
+    pages_path = str(work / "pages")
     cfg = PipelineConfig()
-    staged_s = _staged_build(tr, spark, pages_path, cfg, ref, tally)
-    log(f"staged build {staged_s:.3f}s")
+    try:
+        write_pages(spark, pages_path, scale.docs, seed)
+        # warm-up build (JIT, Python workers); its digest is the reference
+        ref = reference_digest(spark, pages_path)
+        log("warm-up done")
+        staged_s = _staged_build(tr, spark, pages_path, cfg, ref, tally)
+        log(f"staged build {staged_s:.3f}s")
 
-    with tr.group("pipeline"):
-        t0 = time.perf_counter()
-        kg = build_kg(spark, read_table(spark, pages_path))
-        t1 = time.perf_counter()
-        kg.triples.count()
-        t2 = time.perf_counter()
-    fused_s = t2 - t0
-    tr.put("pipeline.build_call_s", t1 - t0, "s")
-    tr.put("pipeline.count_s", t2 - t1, "s")
-    tr.put("trace.overhead_s", staged_s - fused_s, "s")
-    log(f"fused build {fused_s:.3f}s")
-    _recrawl(tr, spark, work, kg, pages_path, scale.docs, seed, tally)
-    kg.release()
-    log("recrawl done")
-    tr.job_counts(LAYERS["full_build"])
+        with tr.group("pipeline"):
+            t0 = time.perf_counter()
+            kg = build_kg(spark, read_table(spark, pages_path))
+            t1 = time.perf_counter()
+            kg.triples.count()
+            t2 = time.perf_counter()
+        fused_s = t2 - t0
+        tr.put("pipeline.build_call_s", t1 - t0, "s")
+        tr.put("pipeline.count_s", t2 - t1, "s")
+        tr.put("trace.overhead_s", staged_s - fused_s, "s")
+        log(f"fused build {fused_s:.3f}s")
 
-    # the event log is complete once the context stops; the JVM stays
-    # up (warm) for the single-core build
-    spark.stop()
-    _event_metrics(tr, work, LAYERS["full_build"])
+        # the serve_annotations store: build_kg's triples as parquet
+        kg.triples.write.mode("overwrite").parquet(str(work / "store"))
+        _queries(tr, spark, read_table(spark, str(work / "store")), seed, tally)
+        log("queries done")
+        v2, recrawled = _recrawl(tr, spark, work, kg, pages_path, scale.docs, seed, tally)
+        kg.release()
+        log("recrawl done")
+        tr.job_counts(LAYERS)
+    finally:
+        # the event log is complete once the context stops; the JVM
+        # stays up (warm) for the single-core build
+        spark.stop()
+    _event_metrics(tr, work, LAYERS)
+
+    # the single-core build is of the recrawl snapshot (2% more docs
+    # than the fused build it is compared with), so that it also gives
+    # the full build the recrawl must equal
     spark1 = get_spark("kgbench-1core", master="local[1]")
     try:
         t0 = time.perf_counter()
-        kg = build_kg(spark1, read_table(spark1, pages_path))
-        n = kg.triples.count()
+        kg = build_kg(spark1, read_table(spark1, v2))
+        kg.triples.count()
         one_s = time.perf_counter() - t0
-        tally.record(n == ref[0], "local[1] build triple count differs")
+        tally.record(digest(kg.triples) == recrawled, "incremental_kg triples != build_kg of v2")
     finally:
         sysmon.stop_spark(spark1)
     tr.put("scaling.build_1core_s", one_s, "s")
     tr.put("scaling.eff_1v4", one_s / (cpus * fused_s), "ratio")
     log(f"local[1] build {one_s:.3f}s")
-
-
-def _walk_serve(tr: Tracer, spark, work: Path, pages_path: str, seed, tally):
-    try:
-        store = _materialize(tr, spark, work, pages_path, tally)
-        log("materialize done")
-        _queries(tr, spark, store, seed, tally)
-        tr.job_counts(LAYERS["serve_annotations"])
-    finally:
-        sysmon.stop_spark(spark)
-    _event_metrics(tr, work, LAYERS["serve_annotations"])
-
-
-def walk(spark, workload: str, work: Path, seed: int, scale, tally, cpus: int) -> dict:
-    """Traced walk for `workload`; stops `spark` (and any session it
-    starts) before returning the per-layer metrics."""
-    tr = Tracer(spark)
-    pages_path = str(work / "pages")
-    write_pages(spark, pages_path, scale.docs, seed)
-    if workload == "full_build":
-        # warm-up build (JIT, Python workers); its digest is the reference
-        ref = reference_digest(spark, pages_path)
-        log("warm-up done")
-        _walk_build(tr, spark, work, pages_path, scale, seed, ref, tally, cpus)
-    else:
-        _walk_serve(tr, spark, work, pages_path, seed, tally)
     log("spans " + json.dumps([(n, round(t0, 4), round(t1, 4)) for n, t0, t1 in tr.spans]))
     return tr.metrics

@@ -105,7 +105,7 @@ def main() -> int:
         if args.trace:
             import layers
 
-            metrics = layers.walk(spark, args.workload, WORK, args.seed, scale, tally, cpus)
+            metrics = layers.walk(spark, WORK, args.seed, scale, tally, cpus)
         else:
             work = wl.WORKLOADS[args.workload](spark, WORK, args.seed, scale, tally)
             work.setup()

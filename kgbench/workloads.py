@@ -31,6 +31,9 @@ ANNOTATIONS_RQ = Path(__file__).with_name("annotations.rq").read_text()
 
 TRIPLE_COLS = ("subj", "pred", "obj", "obj_is_uri", "lang", "datatype")
 
+#: queries run before the serve_annotations loop measures
+WARMUP_QUERIES = 4
+
 
 @dataclass(frozen=True)
 class Scale:
@@ -170,10 +173,12 @@ class ServeAnnotations:
         self.draws = random.Random(self.seed).choices(uris, k=self.scale.query_draws)
         self.expected = expected_annotations(self.store, set(self.draws))
         log("native reference computed")
-        # warm-up query; like every measured query it is checked
-        # against the native operator
-        _, _, ok = self.op(-1)
-        self.tally.record(ok, f"annotations.rq != native for {self.draws[-1]}")
+        # warm-up queries, from the end of the draws: the first few
+        # queries of a session are slower.  Like every measured query,
+        # each is checked against the native operator
+        for i in range(-WARMUP_QUERIES, 0):
+            _, _, ok = self.op(i)
+            self.tally.record(ok, f"annotations.rq != native for {self.draws[i]}")
 
     def op(self, i: int) -> tuple[float, int, bool]:
         uri = self.draws[i % len(self.draws)]
