@@ -66,7 +66,12 @@ def _driver_cc(spark, rows) -> DataFrame:
     round — the iterative distributed algorithm costs O(rounds)
     driver round-trips, which becomes the pipeline's Amdahl serial
     floor when the equivalence population is tiny (the common case:
-    only multi-minted entities produce sameAs edges)."""
+    only multi-minted entities produce sameAs edges).
+
+    The map is returned broadcast-hinted: its size is known here (at
+    most two rows per probed edge), while a DataFrame built from
+    driver rows carries no size statistics, so without the hint the
+    planner would sort-merge every join against it."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -87,7 +92,7 @@ def _driver_cc(spark, rows) -> DataFrame:
     srt = sorted((x, find(x)) for x in parent)
     all_nodes = {x for x, _ in srt} | {r for _, r in srt}
     out = sorted((x, find(x)) for x in all_nodes)
-    return spark.createDataFrame(out, "uri string, canon_uri string")
+    return F.broadcast(spark.createDataFrame(out, "uri string, canon_uri string"))
 
 
 def connected_components(
@@ -98,13 +103,14 @@ def connected_components(
     canon_uri is the lexicographically smallest member of each
     component; every member (including the root) gets a row.
 
-    Size-aware strategy (same principle as the rewrite broadcast):
-    an edge set under `driver_threshold` is solved with driver-side
-    union-find — identical output, two jobs; larger sets run the
-    distributed large-star/small-star iteration, whose O(log d)
-    rounds are the only scale-safe option when the closure itself
-    exceeds driver memory.  The threshold counts DISTINCT UNDIRECTED
-    edges (the count runs after the dedup below); the 100k default
+    Size-aware strategy: an edge set of at most `driver_threshold`
+    edges is solved with driver-side union-find — identical output,
+    one job, and a broadcast-hinted map (see _driver_cc); larger sets
+    run the distributed large-star/small-star iteration, whose
+    O(log d) rounds are the only scale-safe option when the closure
+    itself exceeds driver memory, and whose map is left unhinted for
+    AQE to size at runtime.  The threshold counts DISTINCT UNDIRECTED
+    edges (the probe runs after the dedup below); the 100k default
     keeps the collected Python Row list in the tens-of-MB range —
     well clear of the multi-GB object-overhead cliff a
     million-edge-of-URIs collect would sit on."""
@@ -116,14 +122,9 @@ def connected_components(
     )
     # ONE job decides the strategy AND feeds the driver path: a
     # limit-probe collect returns the complete edge set iff it is
-    # under the threshold (the limit didn't truncate) — replacing
-    # the former checkpoint+count+collect triple, which cost three
-    # driver round-trips on the latency-critical small case
+    # under the threshold (the limit didn't truncate).  It is the
+    # only Spark action of a small build's canonicalization.
     probe = e.limit(driver_threshold + 1).collect()
-    if len(probe) == 0:
-        return e.select(
-            F.col("u").alias("uri"), F.col("v").alias("canon_uri")
-        )
     if len(probe) <= driver_threshold:
         return _driver_cc(e.sparkSession, probe)
     e = e.localCheckpoint(eager=True)
@@ -151,11 +152,7 @@ def connected_components(
     return members.union(roots).distinct()
 
 
-def rewrite_triples(
-    triples: DataFrame,
-    canon_map: DataFrame,
-    broadcast_threshold: int = 2_000_000,
-) -> DataFrame:
+def rewrite_triples(triples: DataFrame, canon_map: DataFrame) -> DataFrame:
     """Rewrite subj and (URI-valued) obj through the canonical map,
     then dropDuplicates — ferenda's equivs-dict rewrite
     (graphanalyze.py:271-277) generalized to the full closure.
@@ -164,16 +161,14 @@ def rewrite_triples(
     would collapse into self-loops, so they are dropped — the
     canon_map table itself is the canonical record of equivalence.
 
-    Two left joins + coalesce.  The broadcast decision is made
-    explicitly from the canon map's measured row count (it is CC
-    output, already materialized by localCheckpoint, so the count is
-    a cheap cached-scan action): a small map broadcasts — skipping
-    two full shuffle writes of the triples table, which even AQE's
-    runtime conversion would pay — while a map past the threshold
-    falls back to a shuffle join rather than forcing an OOM-risk
-    broadcast.  This replaces both the unconditional hint (OOM at
-    100× duplicate populations) and the hint-free plan (measured 2×
-    pipeline slowdown at 250k docs from the wasted shuffle writes).
+    Two left joins + coalesce, planned lazily: this starts no Spark
+    job.  The join strategy comes from the map itself.  A map from
+    connected_components' driver path arrives broadcast-hinted (its
+    size is known where it is built), so both joins broadcast and the
+    triples table is never shuffled for them; the hint carries through
+    the projections below.  A distributed-path or stored map is
+    unhinted, and the planner and AQE size it from its statistics,
+    falling back to a shuffle join when it is too large to broadcast.
     """
     from ferenda_spark.config import OWL_SAMEAS
 
@@ -184,8 +179,6 @@ def rewrite_triples(
     cm_o = canon_map.select(
         F.col("uri").alias("obj"), F.col("canon_uri").alias("_co")
     )
-    if canon_map.count() <= broadcast_threshold:
-        cm_s, cm_o = F.broadcast(cm_s), F.broadcast(cm_o)
     return (
         triples.join(cm_s, "subj", "left")
         .join(cm_o, "obj", "left")

@@ -6,9 +6,15 @@ cutoff 0.8) with a warning. The gazetteer is small (dimension-sized)
 — classic broadcast join; the fuzzy pass only runs on the exact-miss
 remainder, as a vectorized pandas UDF scoring each candidate name
 against the broadcast label list.
+
+Both passes read one driver-side (name_lower, label) list, built once
+per gazetteer DataFrame, and `gazetteer_df` builds that DataFrame once
+per session: repeated builds in a session run no gazetteer job.
 """
 
 from __future__ import annotations
+
+import weakref
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -26,27 +32,55 @@ GAZETTEER_SCHEMA = T.StructType(
 )
 
 
+class _Gazetteer:
+    """One gazetteer's (name_lower, label) pairs, which the fuzzy pass
+    reads, and the exact pass's lookup table built from them: the two
+    passes agree on the label of every name."""
+
+    def __init__(self, spark: SparkSession, rows) -> None:
+        # a label and its alt labels, first gazetteer row first: the
+        # first row naming a lowercase name wins it
+        pairs: dict[str, str] = {}
+        for label, alt_labels in rows:
+            for name in (label, *(alt_labels or ())):
+                if name is not None:
+                    pairs.setdefault(name.lower(), label)
+        self.pairs = list(pairs.items())
+        self.lookup = spark.createDataFrame(
+            self.pairs, "name_lower string, label string"
+        )
+
+
+#: gazetteer DataFrame -> its _Gazetteer; filled without a Spark job
+#: by gazetteer_df, and by one collect for any other gazetteer
+_GAZETTEERS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+#: (session, the DataFrame gazetteer_df returns for it), latest session
+_session_gaz: tuple = (None, None)
+
+
 def gazetteer_df(spark: SparkSession, cfg: PipelineConfig | None = None) -> DataFrame:
+    """The built-in gazetteer (slug, label, alt_labels), one DataFrame
+    per session.  Its rows do not depend on `cfg` (the minted URIs do,
+    and they are not columns here)."""
+    global _session_gaz
     from ferenda_spark.datagen import gazetteer_rows
 
-    rows = [
-        (g["slug"], g["label"], g["alt_labels"]) for g in gazetteer_rows(cfg)
-    ]
-    return spark.createDataFrame(rows, GAZETTEER_SCHEMA)
+    if _session_gaz[0] is not spark:
+        rows = [
+            (g["slug"], g["label"], g["alt_labels"]) for g in gazetteer_rows(cfg)
+        ]
+        gaz = spark.createDataFrame(rows, GAZETTEER_SCHEMA)
+        _GAZETTEERS[gaz] = _Gazetteer(spark, [(r[1], r[2]) for r in rows])
+        _session_gaz = (spark, gaz)
+    return _session_gaz[1]
 
 
-def _name_lookup(gaz: DataFrame) -> DataFrame:
-    """Exploded (name_lower -> primary label) lookup incl. alt labels."""
-    return (
-        gaz.select(
-            F.col("label"),
-            F.explode(
-                F.array_union(F.array(F.col("label")), F.col("alt_labels"))
-            ).alias("name"),
-        )
-        .select(F.lower(F.col("name")).alias("name_lower"), "label")
-        .dropDuplicates(["name_lower"])
-    )
+def _gazetteer(gaz: DataFrame) -> _Gazetteer:
+    g = _GAZETTEERS.get(gaz)
+    if g is None:
+        rows = gaz.select("label", "alt_labels").collect()
+        g = _GAZETTEERS[gaz] = _Gazetteer(gaz.sparkSession, rows)
+    return g
 
 
 def link_names(
@@ -60,23 +94,23 @@ def link_names(
     Exact pass: broadcast equi-join on lowercase name.
     Fuzzy pass: only exact-miss rows, difflib ratio >= cfg.fuzzy_cutoff
     against the broadcast candidate list (mirrors get_close_matches).
+    A gazetteer from `gazetteer_df` starts no job here; any other is
+    collected once, on its first use.
     """
-    lookup = _name_lookup(gaz)
+    g = _gazetteer(gaz)
     exact = names.join(
-        F.broadcast(lookup),
+        F.broadcast(g.lookup),
         F.lower(F.col(name_col)) == F.col("name_lower"),
         "left",
     ).drop("name_lower")
 
-    cand = [(r["name_lower"], r["label"]) for r in lookup.collect()]
+    names_l = [n for n, _ in g.pairs]
+    by_name = dict(g.pairs)
     cutoff = cfg.fuzzy_cutoff
 
     @F.pandas_udf(T.StringType())
     def fuzzy_match(s: pd.Series) -> pd.Series:
         import difflib
-
-        names_l = [c[0] for c in cand]
-        by_name = dict(cand)
 
         def best(v):
             if not v:

@@ -173,6 +173,24 @@ def _jvm_scan_col(text):
     return _let(bindings, masked)
 
 
+#: (py4j gateway, _jvm_scan_col(F.col("text"))) for the live JVM
+_text_scan: tuple = (None, None)
+
+
+def _text_scan_col():
+    """The scan of the `text` column, built once per live JVM: the
+    expression is the same for every build, and assembling it takes
+    a few thousand py4j calls.  A new gateway (the JVM was restarted)
+    builds it again."""
+    global _text_scan
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    if _text_scan[0] is not gateway or gateway is None:
+        _text_scan = (gateway, _jvm_scan_col(F.col("text")))
+    return _text_scan[1]
+
+
 def _mask_and_sort(wa, names: list):
     # NOTE scale bound: the exists() probe is pairwise — O(M²) in
     # mentions per SECTION (JVM codegen comparisons: ~10 s at 10^5
@@ -207,7 +225,7 @@ def detect_mentions(segments: DataFrame, engine: str = "jvm") -> DataFrame:
     abstract row alike.  engine='jvm' (default) keeps the scan in
     Catalyst expressions; engine='python' runs the pandas-UDF
     reference implementation."""
-    scan = _jvm_scan_col(F.col("text")) if engine == "jvm" else _scan_udf(F.col("text"))
+    scan = _text_scan_col() if engine == "jvm" else _scan_udf(F.col("text"))
     return (
         segments.select(
             "url",

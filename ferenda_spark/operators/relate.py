@@ -31,11 +31,7 @@ def _doc_part(uri_col):
     return F.split(uri_col, "#", 2).getItem(0)
 
 
-def relate_edges(
-    triples: DataFrame,
-    doc_directory: DataFrame,
-    broadcast_threshold: int = 1_000_000,
-) -> DataFrame:
+def relate_edges(triples: DataFrame, doc_directory: DataFrame) -> DataFrame:
     """triples + doc_directory(doc_uri, url) -> edges(src_url,
     dst_url, pred, src_uri, dst_uri).
 
@@ -43,14 +39,15 @@ def relate_edges(
     (documentrepository.py:2052-2059), and excluding self-edges
     (doc citing itself resolves to a doc-internal part, not a dep).
 
-    Size-aware broadcast (rewrite_triples pattern): a directory
-    under `broadcast_threshold` rows (~80 MB of (uri, url) strings
-    at the default) broadcasts, turning both directory joins into
-    map-side probes — two shuffles of the refs table saved.  Past
-    the threshold (the 10^12-doc regime, where the directory is
-    corpus-sized) it falls back to sort-merge on the bucketed key,
-    with AQE splitting the Zipf-skewed dst side.  The count is a
-    cheap projection of the cached segments table.
+    Planned lazily: this starts no Spark job.  The directory is a
+    two-column projection of the segments table (cached in build_kg,
+    stored in run_pipeline), and its size statistics are what the
+    planner needs: a directory under the broadcast threshold
+    broadcasts, turning both directory joins into map-side probes —
+    two shuffles of the refs table saved.  A corpus-sized directory
+    (the 10^12-doc regime) sort-merges on the bucketed key instead,
+    with AQE re-sizing the joins at runtime and splitting the
+    Zipf-skewed dst side.
     """
     refs = (
         triples.filter(F.col("obj_is_uri"))
@@ -68,8 +65,6 @@ def relate_edges(
     dst_dir = doc_directory.select(
         F.col("doc_uri").alias("dst_uri"), F.col("url").alias("dst_url")
     )
-    if doc_directory.count() <= broadcast_threshold:
-        src_dir, dst_dir = F.broadcast(src_dir), F.broadcast(dst_dir)
     return (
         refs.join(src_dir, "src_uri", "inner")
         .join(dst_dir, "dst_uri", "inner")  # AQE splits skewed dst keys

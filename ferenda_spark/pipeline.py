@@ -65,7 +65,12 @@ class KGResult:
     # emission inputs — exposed so the kg_triples oracle can
     # independently recompute emit -> CC -> rewrite in SQL from the
     # SAME upstream tables (the Python FSM/link stages stay
-    # golden-pytest-checked; the relational layer gets a DuckDB twin)
+    # golden-pytest-checked; the relational layer gets a DuckDB twin).
+    # `linked` is the linked doc rows (the emit_doc_triples input) for
+    # build_kg and run_pipeline-shaped results only: an incremental_kg
+    # result with the delta-scoped tail carries the corpus-wide
+    # 2-column (url, entity_label) label table here instead, which is
+    # all kg_state and emit_sameas_triples read
     linked: DataFrame | None = None
     mentions_t: DataFrame | None = None
     # every DataFrame the build persisted — a long-running caller
@@ -375,18 +380,17 @@ def incremental_kg(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # the key-set count — small vs the corpus (it IS the delta);
-    # size-aware broadcast (same pattern as rewrite_triples)
+    # the key-set count — small vs the corpus (it IS the delta) —
+    # feeds the delta tail's rework shortcut, and materializes the
+    # cache, so every join on the delta keys below is planned from
+    # their exact size (a broadcast, unless the delta is huge)
     n_delta = delta_urls.count()
     # delta payload rows: a broadcast semi-join back onto the
     # snapshot — map-side, so the html column is scanned (from the
     # caller's cache) but never shuffled
-    delta_pages = new_pages.join(
-        F.broadcast(delta_urls) if n_delta <= 1_000_000 else delta_urls,
-        "url",
-        "left_semi",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    keys = F.broadcast(delta_urls) if n_delta <= 1_000_000 else delta_urls
+    delta_pages = new_pages.join(delta_urls, "url", "left_semi").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
     d_docs = extract_docs(delta_pages)
     # persisted: feeds detect_mentions AND the segments merge — the
@@ -401,7 +405,7 @@ def incremental_kg(
         # to the stage schema so run_pipeline outputs (which carry
         # url_bucket) merge cleanly
         return prior.select(*delta.columns).join(
-            keys, "url", "left_anti"
+            delta_urls, "url", "left_anti"
         ).unionByName(delta)
 
     docs = merge(state.docs, d_docs)
@@ -429,12 +433,6 @@ def incremental_kg(
         result = _finish_kg(spark, docs, segments, mentions, cfg)
     result.cached = result.cached + (delta_pages, d_segments, delta_urls)
     return result, delta_urls
-
-
-def _sized(df: DataFrame, n: int, threshold: int = 1_000_000) -> DataFrame:
-    """Broadcast a join side only when its measured row count is
-    safely under the OOM line (rewrite_triples pattern)."""
-    return F.broadcast(df) if n <= threshold else df
 
 
 def _subj_doc(col: F.Column) -> F.Column:
@@ -486,8 +484,11 @@ def _delta_tail(
 
     Reference semantics: the per-doc needed() skip of
     documentstore.py:400-470 extended to the relate/canonicalize
-    stages the reference recomputes globally on every run."""
-    delta_keys = _sized(delta_urls, n_delta)
+    stages the reference recomputes globally on every run.
+
+    Join strategies are left to the planner and AQE: the key tables
+    (delta urls, remapped values, rework urls) are cached and counted
+    before their joins are planned, so their statistics are exact."""
 
     # (1) corpus label table: stored labels for unchanged urls, a
     # fresh gazetteer link for the delta (link_names is per-row
@@ -502,7 +503,7 @@ def _delta_tail(
     ).persist(StorageLevel.MEMORY_AND_DISK)
     labels_tbl = (
         state.labels.select("url", "entity_label")
-        .join(delta_keys, "url", "left_anti")
+        .join(delta_urls, "url", "left_anti")
         .unionByName(d_linked.select("url", "entity_label"))
     )
     sameas = emit_sameas_triples(labels_tbl, cfg).select(
@@ -523,7 +524,7 @@ def _delta_tail(
     # driver discipline (at 10^12 pages a few-percent delta can
     # touch millions of labels).
     cand = (
-        state.labels.join(delta_keys, "url", "left_semi")
+        state.labels.join(delta_urls, "url", "left_semi")
         .select("entity_label")
         .unionByName(d_linked.select("entity_label"))
         .filter(F.col("entity_label").isNotNull())
@@ -583,7 +584,7 @@ def _delta_tail(
         .select(doc_uri_col(cfg, F.col("docid")).alias("doc_uri"), "url")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    rework_doc_uris = prior_dir.join(delta_keys, "url", "left_semi").select(
+    rework_doc_uris = prior_dir.join(delta_urls, "url", "left_semi").select(
         "doc_uri"
     ).union(
         d_doc_rows.filter(F.col("docid").isNotNull()).select(
@@ -594,16 +595,12 @@ def _delta_tail(
         # only when some component actually remapped does the prior
         # table need the canon probe (a 2-column pruned scan)
         canon_hit = (
-            state.triples.join(_sized(s_vals, n_s), "obj", "left_semi")
+            state.triples.join(s_vals, "obj", "left_semi")
             .select(_subj_doc(F.col("subj")).alias("doc_uri"))
             .distinct()
         )
         rework_doc_uris = rework_doc_uris.union(canon_hit)
-    rework_doc_uris = rework_doc_uris.distinct().persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    n_rw_uris = rework_doc_uris.count()
-    rw_uris = _sized(rework_doc_uris, n_rw_uris)
+    rw_uris = rework_doc_uris.distinct().persist(StorageLevel.MEMORY_AND_DISK)
 
     # every url sharing a rework doc URI is reworked (docid-collision
     # closure), plus the delta itself
@@ -615,7 +612,6 @@ def _delta_tail(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_rw_urls = rework_urls.count()
-    rw_keys = _sized(rework_urls, n_rw_urls)
 
     # (5) kept prior triples: subjects owned by untouched docs
     kept = (
@@ -636,8 +632,8 @@ def _delta_tail(
     if n_rw_urls == n_delta:
         rw_segments, rw_mentions, rw_linked_in = d_segments, d_mentions, d_linked
     else:
-        rw_segments = segments.join(rw_keys, "url", "left_semi")
-        rw_mentions = mentions.join(rw_keys, "url", "left_semi")
+        rw_segments = segments.join(rework_urls, "url", "left_semi")
+        rw_mentions = mentions.join(rework_urls, "url", "left_semi")
         rw_linked_in = None
     triples_raw, _docids, rw_linked, rw_mentions_t = _assemble_triples(
         spark, rw_segments, rw_mentions, cfg, linked=rw_linked_in
@@ -655,8 +651,8 @@ def _delta_tail(
 
     # directory from the PERSISTED prior projection + delta doc rows
     # (identical to a merged-segments projection, without re-scanning
-    # the stored segments lineage for every relate_edges count/join)
-    doc_directory = prior_dir.join(delta_keys, "url", "left_anti").unionByName(
+    # the stored segments lineage for every relate_edges join)
+    doc_directory = prior_dir.join(delta_urls, "url", "left_anti").unionByName(
         d_doc_rows.filter(F.col("docid").isNotNull()).select(
             doc_uri_col(cfg, F.col("docid")).alias("doc_uri"), "url"
         )
@@ -709,7 +705,7 @@ def _delta_tail(
         cached=tuple(
             df for df in (
                 d_linked, cand, rw_linked, s_vals, prior_dir,
-                rework_doc_uris, rework_urls, rework,
+                rw_uris, rework_urls, rework,
             ) if df is not None
         ),
     )

@@ -11,12 +11,39 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_cpus() -> int:
+    """Cores this process may run on (its affinity mask, where the OS
+    has one)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
+def _driver_memory() -> str:
+    """A quarter of the host's MemTotal, at least 1 GB, for the driver
+    heap: a local-mode driver JVM is the whole cluster, and its
+    resident size runs well past -Xmx (off-heap buffers, metaspace),
+    with the Python workers beside it.  4g when /proc/meminfo is
+    missing."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "4g"
+    return f"{max(1024, kb // 4 // 1024)}m"
+
+
 def get_spark(
     app_name: str = "ferenda_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """A session sized to the host: `local[cores]`, shuffle partitions
+    = cores, and a driver heap of a quarter of RAM.  The environment
+    overrides each (`SPARK_GRAFT_CPUS`, `SPARK_SHUFFLE_PARTITIONS`,
+    `SPARK_DRIVER_MEM`), and so do the arguments."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_host_cpus())
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus)
@@ -38,7 +65,10 @@ def get_spark(
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -251,7 +251,10 @@ def _local_path(uri: str) -> str:
 def _gz_member_extents(fh) -> Iterator[tuple[int, int]]:
     """(offset, length) of every gzip member in an open file,
     streaming in bounded chunks — constant memory however large the
-    archive (the indexing pass never holds the file)."""
+    archive (the indexing pass never holds the file) and however far
+    a member expands: decompressed output is capped at one chunk per
+    step and dropped, so a ~1000:1 member costs no more than any
+    other."""
     chunk_size = 1 << 20
     file_pos = 0
     member_start = 0
@@ -264,7 +267,11 @@ def _gz_member_extents(fh) -> Iterator[tuple[int, int]]:
                 return
             file_pos += len(pending)
         try:
-            d.decompress(pending)
+            # a full chunk of output may leave more buffered in zlib,
+            # even with no input left: drain until it asks for input
+            out = d.decompress(pending, chunk_size)
+            while not d.eof and (d.unconsumed_tail or len(out) == chunk_size):
+                out = d.decompress(d.unconsumed_tail, chunk_size)
         except zlib.error as e:
             raise ValueError(f"warc: corrupt gzip member: {e}") from e
         if d.eof:

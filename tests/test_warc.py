@@ -168,6 +168,37 @@ def test_record_index_extents_are_exact(spark, tmp_path):
         assert raw[off : off + ln].startswith(b"WARC/1.0")
 
 
+def test_gz_extents_of_a_highly_compressible_member_use_bounded_memory():
+    """A member that inflates ~1000:1 (40 MB of zeros in ~40 KB) is
+    indexed with exact extents, and the indexing pass never holds its
+    decompressed bytes: the traced peak stays at a few read chunks."""
+    import io
+    import tracemalloc
+
+    from ferenda_spark.sources.warc import _gz_member_extents
+
+    members = [
+        gzip.compress(_record("response", "http://a.org/x", _http(200, HTML1))),
+        gzip.compress(
+            _record("response", "http://z.org/", _http(200, bytes(40 << 20)))
+        ),
+        gzip.compress(_record("response", "http://b.org/y", _http(200, HTML2))),
+    ]
+    want, off = [], 0
+    for m in members:
+        want.append((off, len(m)))
+        off += len(m)
+    fh = io.BytesIO(b"".join(members))
+    tracemalloc.start()
+    try:
+        got = list(_gz_member_extents(fh))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert got == want
+    assert peak < 8 << 20, f"peak {peak} bytes"
+
+
 def test_split_read_equals_whole_file_read(spark, tmp_path):
     """The indexed range-reader returns row-for-row what the
     whole-file reader returns, across multiple partitions and both
