@@ -70,7 +70,8 @@ def closure_pairs(
     distinct (src, dst) pairs, while the deduped frontier is bounded
     by the pair count.  Costs one exchange per hop; the dedup key is
     the same (src) the next join shuffles on, so AQE reuses the
-    partitioning where it can."""
+    partitioning where it can.  A path with a ground endpoint walks
+    from that endpoint instead (frontier_nodes)."""
     out = step if min_hops <= 1 else None
     hop = step
     for i in range(2, max_hops + 1):
@@ -85,16 +86,21 @@ def closure_pairs(
     return out.distinct()
 
 
+def _pred_step(triples: DataFrame, pred: str) -> DataFrame:
+    """The (src, dst) edge relation of one predicate: a selective
+    scan, its constant pushed down to the store."""
+    return triples.filter(F.col("pred") == pred).select(
+        F.col("subj").alias("src"), F.col("obj").alias("dst")
+    )
+
+
 def property_path(
     triples: DataFrame, pred: str, min_hops: int = 1, max_hops: int = 3
 ) -> DataFrame:
     """(src, dst) pairs connected by `pred` chains of min..max hops —
     the bounded reading of SPARQL's `pred+`.  One selective scan of
     the predicate (pushed down to the store), then closure_pairs."""
-    step = triples.filter(F.col("pred") == pred).select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    return closure_pairs(step, min_hops, max_hops)
+    return closure_pairs(_pred_step(triples, pred), min_hops, max_hops)
 
 
 #: path-quantifier suffix on a predicate string: pred{m,n} / pred{n}
@@ -175,9 +181,7 @@ def _alts_pairs(triples: DataFrame, alts, max_path_hops: int) -> DataFrame:
                     )
                 step = property_path(triples, base, lo, hi)
             else:
-                step = triples.filter(F.col("pred") == p).select(
-                    F.col("subj").alias("src"), F.col("obj").alias("dst")
-                )
+                step = _pred_step(triples, p)
             if inv:
                 step = step.select(
                     F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -218,6 +222,42 @@ def _pred_closure(p, max_path_hops: int):
     return None
 
 
+def frontier_nodes(
+    step: DataFrame, start: str, min_hops: int, max_hops: int,
+    reverse: bool = False,
+) -> DataFrame:
+    """Nodes `n` reached from the constant `start` over min..max
+    steps of a (src, dst) edge relation, walked src -> dst (or
+    dst -> src when `reverse`).  Hop 1 is the step rows whose near
+    end is `start`; hop i is `step LEFT SEMI JOIN hop(i-1)` on the
+    near end, so every hop reads only rows reachable from `start`
+    and emits each step row at most once — no per-hop distinct is
+    needed, the frontier is bounded by the step relation however
+    many paths reach a node.  One distinct over the union of hops
+    min..max (plus `start` itself when min_hops is 0).  This is the
+    ground-endpoint counterpart of closure_pairs: a one-document
+    isPartOf* walk reads that document's containment chain, not the
+    closure of the whole relation."""
+    near, far = ("dst", "src") if reverse else ("src", "dst")
+    hop = step.filter(F.col(near) == start)
+    reached = []
+    if min_hops == 0:
+        reached.append(step.sparkSession.range(1).select(F.lit(start).alias("n")))
+    for i in range(1, max_hops + 1):
+        if i > 1:
+            hop = step.join(
+                hop.select(F.col(far).alias("_f")),
+                F.col(near) == F.col("_f"),
+                "left_semi",
+            )
+        if i >= min_hops:
+            reached.append(hop.select(F.col(far).alias("n")))
+    out = reached[0]
+    for r in reached[1:]:
+        out = out.union(r)
+    return out.distinct()
+
+
 def _path_pattern_df(
     triples: DataFrame, s, base, o, min_hops: int, max_hops: int,
     max_path_hops: int = 3,
@@ -225,13 +265,16 @@ def _path_pattern_df(
     """Compile a path pattern (pred+ / pred* / pred{m,n} or a
     quantified parenthesized body, bounded).
 
-    min_hops=0 is SPARQL zero-or-more: ground endpoints filter the
-    pair set — pushed into the hop joins by Catalyst — and
-    contribute the zero-hop identity solution.  A var-var zero-hop
-    needs the node set for the identity rows (distinct subjects ∪
-    URI objects); correct but store-sized, so prefer a ground
-    endpoint where the query allows (the reference's isPartOf*
-    always has one)."""
+    A ground endpoint starts a frontier walk (frontier_nodes) over
+    the step relation — the predicate's scan, or the body's composed
+    edge relation from _alts_pairs — and min_hops=0 (SPARQL
+    zero-or-more) adds the endpoint itself as the zero-hop solution.
+    With both endpoints ground the walk starts from the object and
+    the result is an existence gate.  closure_pairs serves only
+    var-var paths; their zero-hop identity needs the node set
+    (distinct subjects ∪ URI objects) — correct but store-sized, so
+    prefer a ground endpoint where the query allows (the reference's
+    isPartOf* always has one)."""
     if _ACTIVE_GRAPH_VAR.get() is not None:
         # per-graph transitive closure would need graph-keyed hop
         # joins throughout property_path — an explicit non-goal for
@@ -239,51 +282,46 @@ def _path_pattern_df(
         raise ValueError(
             "property paths inside GRAPH ?var are not supported"
         )
-    zero = min_hops == 0
-    if isinstance(base, str):
-        pairs = property_path(triples, base, max(min_hops, 1), max_hops)
-    else:
-        pairs = closure_pairs(
-            _alts_pairs(triples, base, max_path_hops),
-            max(min_hops, 1),
-            max_hops,
+    step = (
+        _pred_step(triples, base)
+        if isinstance(base, str)
+        else _alts_pairs(triples, base, max_path_hops)
+    )
+    if not _is_var(o):
+        nodes = frontier_nodes(step, o, min_hops, max_hops, reverse=True)
+        if not _is_var(s):  # fully-ground path: existence gate, one row max
+            return (
+                nodes.filter(F.col("n") == s)
+                .select(F.lit(True).alias("_ground"))
+                .limit(1)
+            )
+        return nodes.select(F.col("n").alias(_vname(s)))
+    if not _is_var(s):
+        nodes = frontier_nodes(step, s, min_hops, max_hops)
+        return nodes.select(*_uri_binding(F.col("n"), _vname(o)))
+    pairs = closure_pairs(step, max(min_hops, 1), max_hops)
+    if min_hops == 0:
+        nodes = (
+            triples.select(F.col("subj").alias("n"))
+            .union(triples.filter("obj_is_uri").select(F.col("obj").alias("n")))
+            .distinct()
         )
-    if zero:
-        spark_range = triples.sparkSession.range(1)
-        if not _is_var(o):
-            ident = spark_range.select(
-                F.lit(o).alias("src"), F.lit(o).alias("dst")
-            )
-        elif not _is_var(s):
-            ident = spark_range.select(
-                F.lit(s).alias("src"), F.lit(s).alias("dst")
-            )
-        else:
-            nodes = (
-                triples.select(F.col("subj").alias("n"))
-                .union(triples.filter("obj_is_uri").select(F.col("obj").alias("n")))
-                .distinct()
-            )
-            ident = nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
+        ident = nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
         pairs = pairs.union(ident).distinct()
-    cols = []
-    if _is_var(s):
-        cols.append(F.col("src").alias(_vname(s)))
-    else:
-        pairs = pairs.filter(F.col("src") == s)
-    if _is_var(o):
-        v = _vname(o)
-        cols += [
-            F.col("dst").alias(v),
-            F.lit(True).alias(f"_isuri_{v}"),
-            F.lit(None).cast("string").alias(f"_lang_{v}"),
-            F.lit(None).cast("string").alias(f"_dt_{v}"),
-        ]
-    else:
-        pairs = pairs.filter(F.col("dst") == o)
-    if not cols:  # fully-ground path: existence gate, one row max
-        return pairs.select(F.lit(True).alias("_ground")).limit(1)
-    return pairs.select(*cols)
+    return pairs.select(
+        F.col("src").alias(_vname(s)), *_uri_binding(F.col("dst"), _vname(o))
+    )
+
+
+def _uri_binding(col, v: str) -> list:
+    """A path endpoint bound in object position: the node plus the
+    term metadata of a URI."""
+    return [
+        col.alias(v),
+        F.lit(True).alias(f"_isuri_{v}"),
+        F.lit(None).cast("string").alias(f"_lang_{v}"),
+        F.lit(None).cast("string").alias(f"_dt_{v}"),
+    ]
 
 
 def _nps_scan(triples: DataFrame, fwd, invs) -> DataFrame:
@@ -644,7 +682,9 @@ def construct(
     template: [(s, p, o, obj_is_uri), ...]; terms may be variables.
     For a variable object, pass obj_is_uri=None to reuse the matched
     term's own metadata (uri-ness, lang, datatype) captured by the
-    WHERE clause."""
+    WHERE clause.  A solution with a template variable unbound (an
+    OPTIONAL miss) emits no triple for that template; all templates
+    come from one pass over the solutions (emit_templates)."""
     full = _fold_patterns(triples, list(where), max_path_hops, stats=stats)
     for group in optionals:
         gdf = _fold_patterns(triples, group, max_path_hops, stats=stats)
@@ -655,7 +695,7 @@ def construct(
     def term(t):
         return F.col(_vname(t)) if _is_var(t) else F.lit(t)
 
-    parts = []
+    rows = []
     for s, p, o, is_uri in template:
         if _is_var(o):
             v = _vname(o)
@@ -679,18 +719,31 @@ def construct(
             isuri = F.lit(bool(is_uri))
             lang = F.lit(None).cast("string")
             dt = F.lit(None).cast("string")
-        parts.append(
-            full.select(
-                term(s).alias("subj"),
-                term(p).alias("pred"),
-                term(o).alias("obj"),
-                isuri.alias("obj_is_uri"),
-                lang.alias("lang"),
-                dt.alias("datatype"),
-            )
-        )
-    out = parts[0]
-    for p_ in parts[1:]:
-        out = out.unionByName(p_)
-    # graph set semantics, same as the store the reference CONSTRUCTs into
-    return out.distinct()
+        rows.append((term(s), term(p), term(o), isuri, lang, dt))
+    return emit_templates(full, rows)
+
+
+#: the engine's triples schema, as CONSTRUCT emits it
+_TRIPLE_COLS = ("subj", "pred", "obj", "obj_is_uri", "lang", "datatype")
+
+
+def emit_templates(sols: DataFrame, rows) -> DataFrame:
+    """Every CONSTRUCT template triple of every solution in one pass:
+    `rows` holds one (subj, pred, obj, obj_is_uri, lang, datatype)
+    tuple of Columns per template, and a single
+    `inline(array(struct per template))` over the solutions emits
+    them all — the WHERE plan is read once, however many templates
+    there are (a union of one select per template would copy it per
+    template).  A template triple with any unbound term is not
+    generated for that solution (SPARQL §16.2), and the result has
+    graph set semantics, same as the store the reference CONSTRUCTs
+    into."""
+    structs = [
+        F.struct(*(c.alias(n) for c, n in zip(r, _TRIPLE_COLS))) for r in rows
+    ]
+    out = sols.select(F.inline(F.array(*structs)))
+    return out.filter(
+        F.col("subj").isNotNull()
+        & F.col("pred").isNotNull()
+        & F.col("obj").isNotNull()
+    ).distinct()

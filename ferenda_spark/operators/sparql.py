@@ -108,6 +108,7 @@ from ferenda_spark.operators.graphquery import (
     _fold_patterns,
     _join,
     _visible,
+    emit_templates,
     use_graph_var,
 )
 
@@ -493,7 +494,8 @@ def _parse_path_elt(toks, i, prefixes) -> tuple[tuple[bool, str], int]:
             # quantified NPS !(a|^b)+ / !a* / !a{m,n}: compiled
             # exactly like a quantified parenthesized path whose
             # body is the single NPS step — a bounded Kleene closure
-            # (graphquery.closure_pairs) over the complement edge
+            # (graphquery.closure_pairs, or graphquery.frontier_nodes
+            # from a ground endpoint) over the complement edge
             # relation (the _nps_scan).  The ("path", ...) marker
             # reuses the whole pathgroup pipeline; a zero lower
             # bound gets the same zero-hop identity handling as
@@ -550,8 +552,9 @@ def _parse_path(toks, i, prefixes) -> tuple[list, tuple | None, int]:
     path or (lo, hi) for a quantified parenthesized one (hi None =
     engine max_path_hops).  A quantified parenthesized path
     compiles to a bounded Kleene closure over the composed edge
-    relation of its body (graphquery.closure_pairs ∘ _alts_pairs),
-    not a pattern rewrite."""
+    relation of its body (graphquery.closure_pairs ∘ _alts_pairs, or
+    a frontier_nodes walk from a ground endpoint), not a pattern
+    rewrite."""
     parens = toks[i] == "("
     if parens:
         i += 1
@@ -1872,6 +1875,17 @@ def _merge_nulls(left: tuple, parts: list) -> set:
     }
 
 
+def _same_sure_keys(df: DataFrame, nulls: set, parts: list) -> bool:
+    """Does every UNION branch share the same visible variables with
+    the solutions `df`, none of them maybe-unbound on either side?
+    Then Join(P, Union(B1..Bn)) is one equi-join on those keys."""
+    keys = {frozenset(_visible(df) & _visible(p)) for p, _ in parts}
+    if len(keys) != 1:
+        return False
+    (k,) = keys
+    return not (k & nulls) and not any(k & n for _, n in parts)
+
+
 def _values_compat(
     df: DataFrame, nulls: set, vars_: list, rows: list, uri_rows: list
 ) -> tuple[DataFrame, set]:
@@ -2008,11 +2022,22 @@ def _compile_group(
             for p_, _ in parts[1:]:
                 u = u.unionByName(p_, allowMissingColumns=True)
             df, nulls = u, unull
+        elif _same_sure_keys(df, nulls, parts):
+            # Join(P, Union(B1..Bn)) = Union(Join(P,B1)..Join(P,Bn)),
+            # and when every branch shares the same join keys with P,
+            # none of them maybe-unbound on either side, the join
+            # distributes: union the branches first and join once, so
+            # P is read once (annotations.rq's ?s ?p ?o against its
+            # two ?s-keyed branches)
+            u = parts[0][0]
+            for p_, _ in parts[1:]:
+                u = u.unionByName(p_, allowMissingColumns=True)
+            df, nulls = _joined_nulls(df, nulls, u, unull)
         else:
-            # Join(P, Union(B1..Bn)) = Union(Join(P,B1)..Join(P,Bn)):
-            # each branch equi-joins onto the prior solutions on the
-            # variables IT binds — SPARQL compatible-merge, branch by
-            # branch, still nothing but equi-joins
+            # otherwise each branch equi-joins onto the prior
+            # solutions on the variables IT binds — SPARQL
+            # compatible-merge, branch by branch, still nothing but
+            # equi-joins
             joined = [
                 _compat_join(df, nulls, p_, n_) for p_, n_ in parts
             ]
@@ -2358,11 +2383,11 @@ def _run_sparql(
 
     # CONSTRUCT: one output triple per template entry per solution,
     # variable objects re-emitted with their matched term metadata
-    parts = []
-    for s, p, o in q["template"]:
-        def term(t):
-            return F.col(t[1:]) if t.startswith("?") else F.lit(t)
+    def term(t):
+        return F.col(t[1:]) if t.startswith("?") else F.lit(t)
 
+    rows = []
+    for s, p, o in q["template"]:
         if o.startswith("?"):
             v = o[1:]
             # no metadata column => the variable was bound only in
@@ -2390,23 +2415,5 @@ def _run_sparql(
             isuri = F.lit(True)
             lang = F.lit(None).cast("string")
             dt = F.lit(None).cast("string")
-        parts.append(
-            sols.select(
-                term(s).alias("subj"),
-                term(p).alias("pred"),
-                term(o).alias("obj"),
-                isuri.alias("obj_is_uri"),
-                lang.alias("lang"),
-                dt.alias("datatype"),
-            # SPARQL: a template triple with any unbound variable is
-            # not generated for that solution (OPTIONAL/UNION nulls)
-            ).filter(
-                F.col("subj").isNotNull()
-                & F.col("pred").isNotNull()
-                & F.col("obj").isNotNull()
-            )
-        )
-    out = parts[0]
-    for p_ in parts[1:]:
-        out = out.unionByName(p_)
-    return out.distinct()
+        rows.append((term(s), term(p), term(o), isuri, lang, dt))
+    return emit_templates(sols, rows)

@@ -1,21 +1,26 @@
 """Driver round-trips of a build: `build_kg`'s only Spark action is the
 connected-components probe, the operators after it plan lazily, and a
-session builds its gazetteer once.  Jobs are counted per job group
-through the status tracker; join strategies are read from `explain`."""
+session builds its gazetteer once; and of a query: annotations.rq plans
+its WHERE clause once.  Jobs are counted per job group through the
+status tracker; join strategies are read from `explain`."""
 
 import time
 import uuid
 from contextlib import contextmanager
 
 import pytest
+from pyspark.sql import functions as F
 
 from ferenda_spark import pipeline
 from ferenda_spark.config import PipelineConfig
 from ferenda_spark.operators.canonicalize import connected_components, rewrite_triples
+from ferenda_spark.operators.graphquery import pred_stats
 from ferenda_spark.operators.link import gazetteer_df, link_names
-from ferenda_spark.operators.relate import relate_edges
+from ferenda_spark.operators.relate import annotations, relate_edges
+from ferenda_spark.operators.sparql import run_sparql
 from ferenda_spark.pipeline import build_kg
 from ferenda_spark.sources import synth_pages
+from tests.test_sparql import ANNOTATIONS_RQ
 
 CFG = PipelineConfig()
 
@@ -195,3 +200,55 @@ def test_cc_probe_runs_jobs_and_its_map_is_exact(spark):
     assert _jobs(spark, g, want_some=True)
     rows = sorted((r["uri"], r["canon_uri"]) for r in canon.collect())
     assert rows == [("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d")]
+
+
+@pytest.fixture(scope="module")
+def stored(spark, kg, tmp_path_factory):
+    """The module's KG written as parquet and read back, as a store is
+    served, plus the doc with the most triples in its isPartOf tree."""
+    path = str(tmp_path_factory.mktemp("store") / "triples")
+    kg.triples.write.parquet(path)
+    store = spark.read.parquet(path)
+    doc = (
+        annotations(store).groupBy("doc_uri").count()
+        .orderBy(F.desc("count"), "doc_uri").first()["doc_uri"]
+    )
+    return store, doc
+
+
+def _plan_counts(df) -> dict:
+    """Operator counts of df's executed plan: the AQE final plan for
+    Generate and SortMergeJoin, and the whole adaptive plan (final and
+    initial) for parquet scans, so exchange reuse does not hide a copy
+    of the WHERE clause."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    return {
+        "Generate": final.count(" Generate "),
+        "SortMergeJoin": final.count("SortMergeJoin"),
+        "Scan parquet": plan.count("Scan parquet"),
+    }
+
+
+def test_annotations_rq_evaluates_its_where_clause_once(spark, stored):
+    """annotations.rq on a stored KG: the isPartOf* walk starts from the
+    ground doc URI, the UNION joins `?s ?p ?o` once, and both CONSTRUCT
+    templates come from one Generate over one solution set.  Compiled
+    once per template and per UNION branch, with the whole-relation
+    isPartOf closure in each copy, the same query ran 11 jobs over 31
+    parquet scans on this store; compiled once it runs 7 over 21."""
+    store, doc = stored
+    stats = pred_stats(store)
+    with _group(spark, _fresh("annotations")) as g:
+        df = run_sparql(store, ANNOTATIONS_RQ, params={"uri": doc}, stats=stats)
+        rows = df.collect()
+    assert len(_jobs(spark, g, want_some=True)) <= 7
+    counts = _plan_counts(df)
+    assert counts["Generate"] == 1
+    assert counts["SortMergeJoin"] == 0
+    assert counts["Scan parquet"] <= 21
+    native = {
+        (r["subj"], r["pred"], r["obj"])
+        for r in annotations(store).filter(F.col("doc_uri") == doc).collect()
+    }
+    assert native <= {(r["subj"], r["pred"], r["obj"]) for r in rows}

@@ -1296,3 +1296,292 @@ def test_sameterm_matches_naive_model(spark, seed):
         if term[a] == term[b]
     }
     assert got == want, rows
+
+
+# ---------------------------------------------------------------
+# 11. the one-pass annotations.rq shapes: ground-endpoint frontier
+#     walks, a UNION joined once, one emitter for every CONSTRUCT
+#     template
+# ---------------------------------------------------------------
+
+from ferenda_spark.operators import sparql as sparql_mod  # noqa: E402
+
+_P, _Q = EX + "p", EX + "q"
+
+#: (path text, naive edge relation from (p-edges, q-edges), lo, hi)
+_GROUND_PATHS = [
+    (f"<{_P}>*", lambda ep, eq: ep, 0, 3),
+    (f"<{_P}>+", lambda ep, eq: ep, 1, 3),
+    (f"<{_P}>{{2,3}}", lambda ep, eq: ep, 2, 3),
+    (f"<{_P}>{{0,1}}", lambda ep, eq: ep, 0, 1),
+    (f"(<{_P}>|<{_Q}>)*", lambda ep, eq: ep | eq, 0, 3),
+    (
+        f"(<{_P}>/<{_Q}>)+",
+        lambda ep, eq: {(a, c) for a, b in ep for b2, c in eq if b == b2},
+        1,
+        3,
+    ),
+    (
+        f"(<{_P}>|^<{_Q}>){{1,2}}",
+        lambda ep, eq: ep | {(b, a) for a, b in eq},
+        1,
+        2,
+    ),
+]
+
+
+def _diamond_cycle_graph(rnd: random.Random) -> set:
+    """A p-diamond n0 -> {n1, n2} -> n3 (n3 reached by two paths), a
+    p-cycle back n3 -> n0, and random p/q edges on top."""
+    nodes = [EX + f"n{i}" for i in range(6)]
+    n0, n1, n2, n3 = nodes[:4]
+    triples = {(n0, _P, n1), (n0, _P, n2), (n1, _P, n3), (n2, _P, n3), (n3, _P, n0)}
+    triples |= {
+        (rnd.choice(nodes), rnd.choice((_P, _Q)), rnd.choice(nodes))
+        for _ in range(rnd.randint(2, 10))
+    }
+    return triples
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_ground_endpoint_paths_match_naive(spark, seed):
+    """Ground-subject and ground-object p*, p+, p{m,n} and quantified
+    parenthesized paths walk a frontier out from the constant, with
+    no per-hop distinct; on diamonds and cycles they still equal the
+    brute-force closure, and a both-ground path is an existence gate.
+    One UNION query per seed holds every form, each binding its own
+    variable; the direction alternates by seed so every form meets
+    both."""
+    rnd = random.Random(12000 + seed)
+    triples = _diamond_cycle_graph(rnd)
+    g = spark.createDataFrame(
+        [(s, p, o, True, None, None) for s, p, o in triples], SCHEMA
+    )
+    ep = {(s, o) for s, p, o in triples if p == _P}
+    eq = {(s, o) for s, p, o in triples if p == _Q}
+    nodes = sorted({t for s, _, o in triples for t in (s, o)})
+    start = rnd.choice(nodes + [EX + "absent"])
+    branches, want, reach = [], set(), {}
+    for k, (path, edges, lo, hi) in enumerate(_GROUND_PATHS):
+        pairs = _naive_closure(edges(ep, eq), max(lo, 1), hi)
+        zero = {start} if lo == 0 else set()
+        reach[path] = {b for a, b in pairs if a == start} | zero
+        if (seed + k) % 2 == 0:
+            branches.append(f"{{ <{start}> {path} ?y{k} }}")
+            want |= {(k, y) for y in reach[path]}
+        else:
+            branches.append(f"{{ ?y{k} {path} <{start}> }}")
+            want |= {(k, y) for y in {a for a, b in pairs if b == start} | zero}
+    text = "SELECT * WHERE { " + " UNION ".join(branches) + " }"
+    got = {
+        (k, r[f"y{k}"])
+        for r in run_sparql(g, text).collect()
+        for k in range(len(_GROUND_PATHS))
+        if r[f"y{k}"] is not None
+    }
+    assert got == want, (text, sorted(triples))
+    path = rnd.choice(sorted(reach))
+    end = rnd.choice(nodes)
+    ask = run_sparql(g, f"ASK {{ <{start}> {path} <{end}> }}").first()["ask"]
+    assert ask == (end in reach[path]), (path, start, end, sorted(triples))
+
+
+def _spy_union_rewrite(monkeypatch) -> list:
+    """Record every decision of the compiler's union-first check."""
+    seen = []
+    real = sparql_mod._same_sure_keys
+
+    def spy(*args):
+        seen.append(real(*args))
+        return seen[-1]
+
+    monkeypatch.setattr(sparql_mod, "_same_sure_keys", spy)
+    return seen
+
+
+def _solutions(df) -> tuple[list, set]:
+    vars_ = sorted(df.columns)
+    return vars_, {tuple(r[v] for v in vars_) for r in df.collect()}
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_union_joined_once_matches_naive(spark, seed, monkeypatch):
+    """Every branch shares the same surely-bound key with the patterns
+    before it (the anchor; each branch may add fresh variables), so
+    the branches are unioned first and joined once."""
+    rnd = random.Random(13000 + seed)
+    triples, mains, _, _, _ = _gen_full_case(rnd)
+    mains.append(("?v0", EX + "p0", "?v1"))
+    main_vars = sorted({t[1:] for pat in mains for t in pat if t.startswith("?")})
+    nodes = [EX + f"n{i}" for i in range(4)]
+    preds = [EX + f"p{i}" for i in range(3)]
+    anchor = "?" + rnd.choice(main_vars)
+
+    def branch(fresh):
+        alt = [(anchor, rnd.choice(preds), fresh)]
+        if rnd.random() < 0.5:
+            alt.append((fresh, rnd.choice(preds), rnd.choice(nodes + ["?u9"])))
+        return alt
+
+    unions = [[branch("?u0"), branch("?u1"), branch("?u0")][: rnd.randint(2, 3)]]
+    text = _render_full(mains, [], unions, [], rnd)
+    g = spark.createDataFrame(
+        [(s, p, o, o.startswith("http://"), None, None) for s, p, o in triples],
+        SCHEMA,
+    )
+    seen = _spy_union_rewrite(monkeypatch)
+    vars_, got = _solutions(run_sparql(g, text))
+    assert seen == [True], text
+    want = {
+        tuple(sol.get(v) for v in vars_)
+        for sol in _naive_query(triples, mains, [], unions, [])
+    }
+    assert got == want, text
+
+
+def _naive_group(triples, pats, opt):
+    """{ pats OPTIONAL { opt } } by the spec definition."""
+    sols = [{}]
+    for p in pats:
+        sols = _naive_match(triples, p, sols)
+    if not opt:
+        return sols
+    gs = [{}]
+    for p in opt:
+        gs = _naive_match(triples, p, gs)
+    out = []
+    for s in sols:
+        hits = [h for h in gs if all(s[k] == h[k] for k in h if k in s)]
+        out += [{**s, **h} for h in hits] if hits else [s]
+    return out
+
+
+def _render_group(pats, opt) -> str:
+    body = " ".join(_render_pat(t) for t in pats)
+    if opt:
+        body += " OPTIONAL { " + " ".join(_render_pat(t) for t in opt) + " }"
+    return "{ " + body + " }"
+
+
+def _render_pat(t) -> str:
+    return " ".join(x if x.startswith("?") else f"<{x}>" for x in t) + " ."
+
+
+def _merge(left, right):
+    return [
+        {**s, **u}
+        for s in left
+        for u in right
+        if all(s[k] == u[k] for k in u if k in s)
+    ]
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_union_fallback_matches_naive(spark, seed, monkeypatch):
+    """The compiler keeps the branch-by-branch join when the branches'
+    keys differ, when a key is maybe-unbound on the left (bound by one
+    branch of an earlier UNION only), or when a key is maybe-unbound
+    inside a branch (bound under its OPTIONAL)."""
+    rnd = random.Random(14000 + seed)
+    nodes = [EX + f"n{i}" for i in range(4)]
+    preds = [EX + f"p{i}" for i in range(3)]
+    triples = list(
+        {
+            (rnd.choice(nodes), rnd.choice(preds), rnd.choice(nodes + ["L0"]))
+            for _ in range(rnd.randint(6, 14))
+        }
+    )
+
+    def pat(s, o):
+        return (s, rnd.choice(preds), o)
+
+    mains = [pat("?a", "?b")]
+    kind = seed % 3
+    if kind == 0:  # keys differ: {a} against {a, b}
+        first = []
+        alts = [([pat("?a", "?z")], []), ([pat("?a", "?b")], [])]
+    elif kind == 1:  # ?c maybe-unbound on the left
+        first = [([pat("?a", "?c")], []), ([pat("?a", "?d")], [])]
+        alts = [([pat("?c", "?z")], []), ([pat("?c", rnd.choice(nodes))], [])]
+    else:  # ?b maybe-unbound inside a branch
+        first = []
+        alts = [([pat("?a", "?z")], [pat("?z", "?b")]), ([pat("?a", "?b")], [])]
+    unions = [first, alts] if first else [alts]
+    text = (
+        "SELECT * WHERE { " + " ".join(_render_pat(t) for t in mains) + " "
+        + " ".join(
+            " UNION ".join(_render_group(p, o) for p, o in u) for u in unions
+        )
+        + " }"
+    )
+    g = spark.createDataFrame(
+        [(s, p, o, o.startswith("http://"), None, None) for s, p, o in triples],
+        SCHEMA,
+    )
+    seen = _spy_union_rewrite(monkeypatch)
+    vars_, got = _solutions(run_sparql(g, text))
+    assert seen[-1] is False, text
+    sols = _naive_group(triples, mains, [])
+    for u in unions:
+        sols = _merge(sols, [s for p, o in u for s in _naive_group(triples, p, o)])
+    want = {tuple(sol.get(v) for v in vars_) for sol in sols}
+    assert got == want, (text, sorted(triples))
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_construct_templates_skip_unbound_matches_naive(spark, seed):
+    """Several CONSTRUCT templates emitted in one pass: a template
+    whose variable is unbound in a solution (OPTIONAL, or a UNION
+    branch that skips it) yields nothing for that solution, and the
+    others still do."""
+    rnd = random.Random(15000 + seed)
+    nodes = [EX + f"n{i}" for i in range(4)]
+    preds = [EX + f"p{i}" for i in range(3)]
+    triples = list(
+        {
+            (rnd.choice(nodes), rnd.choice(preds), rnd.choice(nodes + ["L0", "L1"]))
+            for _ in range(rnd.randint(6, 14))
+        }
+    )
+    p0, p1, p2 = (rnd.choice(preds) for _ in range(3))
+    where = (
+        f"?x <{p0}> ?y . {{ ?x <{p1}> ?w }} UNION {{ ?y <{p1}> ?v }} "
+        f"OPTIONAL {{ ?y <{p2}> ?z }}"
+    )
+    templates = [
+        ("?x", EX + "t0", "?y"),
+        ("?x", EX + "t1", "?w"),
+        ("?v", EX + "t2", "?x"),
+        ("?y", EX + "t3", "?z"),
+    ][: rnd.randint(2, 4)]
+    text = (
+        "CONSTRUCT { "
+        + " ".join(_render_pat(t) for t in templates)
+        + " } WHERE { " + where + " }"
+    )
+    g = spark.createDataFrame(
+        [(s, p, o, o.startswith("http://"), None, None) for s, p, o in triples],
+        SCHEMA,
+    )
+    got = {
+        (r["subj"], r["pred"], r["obj"], r["obj_is_uri"])
+        for r in run_sparql(g, text).collect()
+    }
+    sols = _naive_group(triples, [("?x", p0, "?y")], [])
+    sols = _merge(
+        sols,
+        _naive_group(triples, [("?x", p1, "?w")], [])
+        + _naive_group(triples, [("?y", p1, "?v")], []),
+    )
+    sols = [
+        s2
+        for s in sols
+        for s2 in (_merge([s], _naive_group(triples, [("?y", p2, "?z")], [])) or [s])
+    ]
+    want = set()
+    for sol in sols:
+        for t in templates:
+            terms = [sol.get(x[1:]) if x.startswith("?") else x for x in t]
+            if None not in terms:
+                want.add((*terms, terms[2].startswith("http://")))
+    assert got == want, (text, sorted(triples))
