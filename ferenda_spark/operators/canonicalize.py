@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ferenda_spark.session import local_frame
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     sym = (
@@ -68,10 +70,11 @@ def _driver_cc(spark, rows) -> DataFrame:
     floor when the equivalence population is tiny (the common case:
     only multi-minted entities produce sameAs edges).
 
-    The map is returned broadcast-hinted: its size is known here (at
-    most two rows per probed edge), while a DataFrame built from
-    driver rows carries no size statistics, so without the hint the
-    planner would sort-merge every join against it."""
+    The map is a `LocalRelation` (session.local_frame) and carries no
+    hint: the planner sizes it from its exact statistics, so joins
+    against a small map broadcast it in a JVM-only job, and a
+    full-outer diff against it (the delta tail) plans without a hint
+    it cannot honour.  Collecting it starts no job."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -92,7 +95,7 @@ def _driver_cc(spark, rows) -> DataFrame:
     srt = sorted((x, find(x)) for x in parent)
     all_nodes = {x for x, _ in srt} | {r for _, r in srt}
     out = sorted((x, find(x)) for x in all_nodes)
-    return F.broadcast(spark.createDataFrame(out, "uri string, canon_uri string"))
+    return local_frame(spark, out, "uri string, canon_uri string")
 
 
 def connected_components(
@@ -105,11 +108,11 @@ def connected_components(
 
     Size-aware strategy: an edge set of at most `driver_threshold`
     edges is solved with driver-side union-find — identical output,
-    one job, and a broadcast-hinted map (see _driver_cc); larger sets
+    one job, and a LocalRelation map (see _driver_cc); larger sets
     run the distributed large-star/small-star iteration, whose
     O(log d) rounds are the only scale-safe option when the closure
-    itself exceeds driver memory, and whose map is left unhinted for
-    AQE to size at runtime.  The threshold counts DISTINCT UNDIRECTED
+    itself exceeds driver memory, and whose map is left for AQE to
+    size at runtime.  The threshold counts DISTINCT UNDIRECTED
     edges (the probe runs after the dedup below); the 100k default
     keeps the collected Python Row list in the tens-of-MB range —
     well clear of the multi-GB object-overhead cliff a
@@ -162,13 +165,13 @@ def rewrite_triples(triples: DataFrame, canon_map: DataFrame) -> DataFrame:
     canon_map table itself is the canonical record of equivalence.
 
     Two left joins + coalesce, planned lazily: this starts no Spark
-    job.  The join strategy comes from the map itself.  A map from
-    connected_components' driver path arrives broadcast-hinted (its
-    size is known where it is built), so both joins broadcast and the
-    triples table is never shuffled for them; the hint carries through
-    the projections below.  A distributed-path or stored map is
-    unhinted, and the planner and AQE size it from its statistics,
-    falling back to a shuffle join when it is too large to broadcast.
+    job.  The join strategy comes from the map's statistics, with no
+    hint.  A map from connected_components' driver path is a
+    LocalRelation whose exact size the planner knows, so both joins
+    broadcast it and the triples table is never shuffled for them.  A
+    distributed-path or stored map is sized by the planner and AQE
+    the same way, falling back to a shuffle join when it is too large
+    to broadcast.
     """
     from ferenda_spark.config import OWL_SAMEAS
 

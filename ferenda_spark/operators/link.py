@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ferenda_spark.config import PipelineConfig
+from ferenda_spark.session import local_frame
 
 GAZETTEER_SCHEMA = T.StructType(
     [
@@ -46,8 +47,8 @@ class _Gazetteer:
                 if name is not None:
                     pairs.setdefault(name.lower(), label)
         self.pairs = list(pairs.items())
-        self.lookup = spark.createDataFrame(
-            self.pairs, "name_lower string, label string"
+        self.lookup = local_frame(
+            spark, self.pairs, "name_lower string, label string"
         )
 
 
@@ -69,7 +70,7 @@ def gazetteer_df(spark: SparkSession, cfg: PipelineConfig | None = None) -> Data
         rows = [
             (g["slug"], g["label"], g["alt_labels"]) for g in gazetteer_rows(cfg)
         ]
-        gaz = spark.createDataFrame(rows, GAZETTEER_SCHEMA)
+        gaz = local_frame(spark, rows, GAZETTEER_SCHEMA)
         _GAZETTEERS[gaz] = _Gazetteer(spark, [(r[1], r[2]) for r in rows])
         _session_gaz = (spark, gaz)
     return _session_gaz[1]

@@ -45,6 +45,7 @@ from ferenda_spark.operators.turtle import (
     RDF_TYPE,
     TRIPLE_SCHEMA,
 )
+from ferenda_spark.session import local_frame
 
 _RDF = "{" + RDF_NS + "}"
 _XML_NS = "http://www.w3.org/XML/1998/namespace"
@@ -396,7 +397,8 @@ def write_rdfxml(triples: DataFrame, path: str) -> None:
     format, so single-file is the only mode."""
     spark = triples.sparkSession
     blocks = to_rdfxml(triples).select(F.lit(1).alias("k"), F.col("block"))
-    shell = spark.createDataFrame(
+    shell = local_frame(
+        spark,
         [(0, '<rdf:RDF xmlns:rdf="' + RDF_NS + '">'), (2, "</rdf:RDF>")],
         "k int, block string",
     )

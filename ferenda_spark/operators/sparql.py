@@ -111,6 +111,7 @@ from ferenda_spark.operators.graphquery import (
     emit_templates,
     use_graph_var,
 )
+from ferenda_spark.session import local_frame
 
 _RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -1907,7 +1908,7 @@ def _values_compat(
         [f"_vv_{v} string" for v in vars_]
         + [f"_vu_{v} boolean" for v in vars_]
     )
-    vdf = df.sparkSession.createDataFrame(data, schema).distinct()
+    vdf = local_frame(df.sparkSession, data, schema).distinct()
     cond = None
     for v in vars_:
         c = F.col(v) == F.col(f"_vv_{v}")
@@ -2149,8 +2150,8 @@ def _compile_group(
                 df, nulls, list(vars_), rows, uri_rows
             )
             continue
-        vdf = df.sparkSession.createDataFrame(
-            list(rows), ", ".join(f"{v} string" for v in vars_)
+        vdf = local_frame(
+            df.sparkSession, rows, ", ".join(f"{v} string" for v in vars_)
         ).distinct()
         df = df.join(F.broadcast(vdf), list(vars_), "inner")
     for f in g["filters"]:
@@ -2360,8 +2361,8 @@ def _run_sparql(
             )
             res = part if res is None else res.unionByName(part)
         if q["describe_iris"]:
-            idf = sols.sparkSession.createDataFrame(
-                [(u,) for u in q["describe_iris"]], "_d string"
+            idf = local_frame(
+                sols.sparkSession, [(u,) for u in q["describe_iris"]], "_d string"
             )
             res = idf if res is None else res.unionByName(idf)
         # resource set is small relative to the store: distinct then

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ferenda_spark.operators.rdfio import escape_literal
+from ferenda_spark.session import local_frame
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDF_TYPE = RDF_NS + "type"
@@ -206,7 +207,8 @@ def write_turtle(
         )
         if header:
             spark = triples.sparkSession
-            hdr = spark.createDataFrame(
+            hdr = local_frame(
+                spark,
                 [(0, line) for line in header.splitlines()],
                 "k int, block string",
             )

@@ -47,6 +47,7 @@ from ferenda_spark.operators.sparql import (
     _resolve,
     _tokenize,
 )
+from ferenda_spark.session import local_frame
 
 #: the engine's term columns, in store order
 _TERM_COLS = ("subj", "pred", "obj", "obj_is_uri", "lang", "datatype")
@@ -148,7 +149,8 @@ def _quads_df(spark, entries, like: DataFrame) -> DataFrame:
     rows = [
         (s, p, o[0], bool(o[1]), o[2], o[3]) for s, p, o in entries
     ]
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         rows,
         "subj string, pred string, obj string, obj_is_uri boolean, "
         "lang string, datatype string",

@@ -30,6 +30,7 @@ from ferenda_spark.operators import dedup as D
 from ferenda_spark.operators import query as Q
 from ferenda_spark.operators import similarity as S
 from ferenda_spark.operators import textstats as X
+from ferenda_spark.session import local_frame
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -2604,8 +2605,8 @@ def q_keyword_terms(spark, sf_dir):
     from ferenda_spark.operators.keyword import keyword_terms
 
     t = _kg(spark, sf_dir).triples
-    mw = spark.createDataFrame([(x,) for x in KEYWORD_MEDIAWIKI_TITLES], ["title"])
-    wp = spark.createDataFrame([(x,) for x in KEYWORD_WIKIPEDIA_TITLES], ["title"])
+    mw = local_frame(spark, [(x,) for x in KEYWORD_MEDIAWIKI_TITLES], "title string")
+    wp = local_frame(spark, [(x,) for x in KEYWORD_WIKIPEDIA_TITLES], "title string")
     return keyword_terms(
         t,
         subject_pred=DCT + "publisher",
@@ -2921,7 +2922,7 @@ def q_toc_collate(spark, sf_dir):
 
     from ferenda_spark.functions.scalars import collation_key
 
-    t = spark.createDataFrame([(x,) for x in COLLATE_TITLES], ["title"])
+    t = local_frame(spark, [(x,) for x in COLLATE_TITLES], "title string")
     w = Window.orderBy("key", "title")
     return (
         t.select("title", collation_key(F.col("title"), "sv_SE").alias("key"))
@@ -2966,7 +2967,7 @@ def q_toc_collate_icu(spark, sf_dir):
 
     from ferenda_spark.functions.scalars import icu_collation_col
 
-    t = spark.createDataFrame([(x,) for x in ICU_COLLATE_TITLES], ["title"])
+    t = local_frame(spark, [(x,) for x in ICU_COLLATE_TITLES], "title string")
     w = Window.orderBy("key", "title")
     return (
         t.select("title", icu_collation_col(F.col("title"), "sv_SE").alias("key"))

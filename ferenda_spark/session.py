@@ -8,7 +8,31 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """Driver-side rows (tuples in `schema`'s field order) as a
+    DataFrame over a `LocalRelation`.  The rows travel as one Arrow
+    table, so the plan carries exact size statistics, collecting it
+    starts no job, and a broadcast of it is a JVM-only job.  A
+    Python-list `createDataFrame` plans a `LogicalRDD` instead, and
+    every job that reads it waits on Python workers.  `schema` is a
+    StructType or a DDL string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    # strict: a row of the wrong width raises, as createDataFrame does
+    cols = list(zip(*rows, strict=True)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow, strict=True)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _host_cpus() -> int:
@@ -71,6 +95,10 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # PySpark's per-Column call-site capture walks the Python stack
+        # and adds py4j round-trips to every F.*/Column call; it only
+        # feeds the call-site section of runtime error messages
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -57,6 +57,7 @@ from ferenda_spark.pipeline import (
     page_fingerprints,
 )
 from ferenda_spark.streaming.ingest import stream_pages
+from ferenda_spark.streaming.resume import fs_exists
 
 STATE_TABLES = ("fingerprints", "docs", "segments", "mentions")
 #: prior-tail tables that switch incremental_kg onto the delta-scoped
@@ -87,7 +88,7 @@ def load_state(spark: SparkSession, state_root: str, version: int) -> KGState:
     tail = {}
     for t in TAIL_TABLES:
         p = _vdir(state_root, version, t)
-        tail[t] = spark.read.parquet(p) if os.path.exists(p) else None
+        tail[t] = spark.read.parquet(p) if fs_exists(spark, p) else None
     return KGState(
         *[spark.read.parquet(_vdir(state_root, version, t)) for t in STATE_TABLES],
         **tail,

@@ -20,13 +20,14 @@ partitions; the mechanism is unchanged.
 
 from __future__ import annotations
 
-import os
 import time
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ferenda_spark.session import local_frame
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -48,7 +49,7 @@ def with_bucket(df: DataFrame, n_buckets: int, col: str = "url") -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, lineage_path: str) -> DataFrame | None:
-    if not _exists(lineage_path):
+    if not _exists(spark, lineage_path):
         return None
     return spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
 
@@ -119,7 +120,7 @@ def run_bucketed_stage(
                 (run_id, stage, int(b), int(counts.get(b, 0)), started, finished, "ok")
                 for b in chunk
             ]
-            spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
+            local_frame(spark, rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(lineage_path)
         cached.unpersist()
@@ -137,15 +138,19 @@ def run_global_stage(
 ) -> DataFrame:
     """Non-bucketed stage (CC, global dedup): one lineage row with
     partition_id=-1; skipped entirely when already ok."""
-    if resume and -1 in done_buckets(spark, lineage_path, stage) and _exists(out_path):
+    if (
+        resume
+        and -1 in done_buckets(spark, lineage_path, stage)
+        and _exists(spark, out_path)
+    ):
         return spark.read.parquet(out_path)
     started = datetime.now(timezone.utc)
     df = df_fn()
     df.write.mode("overwrite").parquet(out_path)
     finished = datetime.now(timezone.utc)
     n = spark.read.parquet(out_path).count()
-    spark.createDataFrame(
-        [(run_id, stage, -1, int(n), started, finished, "ok")], LINEAGE_SCHEMA
+    local_frame(
+        spark, [(run_id, stage, -1, int(n), started, finished, "ok")], LINEAGE_SCHEMA
     ).coalesce(1).write.mode("append").parquet(lineage_path)
     return spark.read.parquet(out_path)
 
@@ -186,16 +191,29 @@ def build_stats(lineage: DataFrame) -> DataFrame:
     )
 
 
-def _exists(path: str) -> bool:
-    return os.path.exists(path) and any(
-        f.endswith(".parquet") for f in _walk_files(path)
-    )
+def _fs_path(spark: SparkSession, path: str):
+    """(the session's Hadoop FileSystem for `path`, its Path): a
+    `file://`, `hdfs://` or `s3a://` root probes as a local path does."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
-def _walk_files(path: str):
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            yield f
+def fs_exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _fs_path(spark, path)
+    return fs.exists(p)
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    """`path` holds a parquet file at any depth, stopping the listing
+    at the first one."""
+    fs, p = _fs_path(spark, path)
+    if not fs.exists(p):
+        return False
+    files = fs.listFiles(p, True)
+    while files.hasNext():
+        if files.next().getPath().getName().endswith(".parquet"):
+            return True
+    return False
 
 
 def new_run_id() -> str:

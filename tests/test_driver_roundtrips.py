@@ -1,8 +1,10 @@
 """Driver round-trips of a build: `build_kg`'s only Spark action is the
 connected-components probe, the operators after it plan lazily, and a
 session builds its gazetteer once; and of a query: annotations.rq plans
-its WHERE clause once.  Jobs are counted per job group through the
-status tracker; join strategies are read from `explain`."""
+its WHERE clause once.  Rows made on the driver enter Spark as
+LocalRelations, which no job has to wait on Python workers to read.
+Jobs are counted per job group through the status tracker; join
+strategies are read from `explain`."""
 
 import time
 import uuid
@@ -15,11 +17,13 @@ from ferenda_spark import pipeline
 from ferenda_spark.config import PipelineConfig
 from ferenda_spark.operators.canonicalize import connected_components, rewrite_triples
 from ferenda_spark.operators.graphquery import pred_stats
-from ferenda_spark.operators.link import gazetteer_df, link_names
+from ferenda_spark.operators.link import _gazetteer, gazetteer_df, link_names
 from ferenda_spark.operators.relate import annotations, relate_edges
 from ferenda_spark.operators.sparql import run_sparql
 from ferenda_spark.pipeline import build_kg
+from ferenda_spark.session import local_frame
 from ferenda_spark.sources import synth_pages
+from ferenda_spark.streaming.resume import run_global_stage
 from tests.test_sparql import ANNOTATIONS_RQ
 
 CFG = PipelineConfig()
@@ -252,3 +256,86 @@ def test_annotations_rq_evaluates_its_where_clause_once(spark, stored):
         for r in annotations(store).filter(F.col("doc_uri") == doc).collect()
     }
     assert native <= {(r["subj"], r["pred"], r["obj"]) for r in rows}
+
+
+def _local_only(df) -> bool:
+    """df's optimized plan reads a LocalRelation and no LogicalRDD."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "LocalRelation" in plan and "LogicalRDD" not in plan
+
+
+def _small_canon(spark):
+    edges = spark.createDataFrame(
+        [("http://x/b", "http://x/a"), ("http://x/c", "http://x/b")],
+        "src string, dst string",
+    )
+    return connected_components(edges)
+
+
+def test_driver_rows_plan_as_local_relations(spark, stored, tmp_path, monkeypatch):
+    """The driver-path canon map, the gazetteer and its lookup, both
+    SPARQL VALUES forms and a lineage row batch plan as LocalRelations:
+    a Python-list createDataFrame plans a LogicalRDD, and every job
+    that reads one waits on Python workers."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    assert _local_only(_small_canon(spark))
+    gaz = gazetteer_df(spark, CFG)
+    assert _local_only(gaz)
+    assert _local_only(_gazetteer(gaz).lookup)
+
+    store, doc = stored
+    table_form = (
+        f"SELECT ?s ?p WHERE {{ ?s ?p ?o . "
+        f"VALUES (?s ?p) {{ (<{doc}> <http://purl.org/dc/terms/title>) }} }}"
+    )
+    maybe_unbound = (
+        f"SELECT ?s ?t WHERE {{ ?s ?p ?o OPTIONAL {{ ?s <http://x/none> ?t }} "
+        f'VALUES (?s ?t) {{ (<{doc}> "t") }} }}'
+    )
+    for q in (table_form, maybe_unbound):
+        assert _local_only(run_sparql(store, q)), q
+
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        if path.endswith("lineage"):
+            written.append(self._df)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    run_global_stage(
+        spark, "g", lambda: spark.range(3), str(tmp_path / "out"),
+        str(tmp_path / "lineage"), "r1",
+    )
+    assert len(written) == 1 and _local_only(written[0])
+
+
+def test_collecting_a_driver_path_canon_map_starts_no_job(spark):
+    canon = _small_canon(spark)
+    with _group(spark, _fresh("canon-collect")) as g:
+        rows = sorted((r["uri"], r["canon_uri"]) for r in canon.collect())
+    assert _jobs(spark, g) == []
+    assert rows == [
+        ("http://x/a", "http://x/a"),
+        ("http://x/b", "http://x/a"),
+        ("http://x/c", "http://x/a"),
+    ]
+
+
+def test_driver_path_canon_map_carries_no_hint(spark):
+    """The planner sizes the map from its own statistics; a hint would
+    be unhonourable in the delta tail's full-outer diff against it."""
+    plan = _small_canon(spark)._jdf.queryExecution().analyzed().toString()
+    assert "ResolvedHint" not in plan and "broadcast" not in plan.lower()
+
+
+def test_local_frame_rejects_a_row_of_the_wrong_width(spark):
+    for rows in ([("a",)], [("a", "b"), ("c",)], [("a", "b", "c")]):
+        with pytest.raises(ValueError):
+            local_frame(spark, rows, "x string, y string")
+
+
+def test_session_turns_call_site_capture_off(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
