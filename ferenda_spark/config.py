@@ -8,7 +8,7 @@ closure capture — cheap, immutable, broadcast-safe.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 #: RDF vocabulary (namespace table mirrors ferenda/util.py:78-93).
@@ -43,19 +43,15 @@ class PipelineConfig:
 
     base_uri: str = "https://kg.example.org"
     alias: str = "rfc"
-    lang: str = "en"
     pipeline_id: str = "ferenda_spark.pipeline"
     # broadcast gazetteer fuzzy-match cutoff (documentrepository.py:568
     # uses difflib cutoff=0.8)
     fuzzy_cutoff: float = 0.8
-    # partitioning knobs — at 10^12 pages these become Iceberg bucket
-    # transforms; locally they size parquet shuffles.
-    shuffle_partitions: int = 32
+    # run_pipeline's stage-table buckets — at 10^12 pages an Iceberg
+    # bucket transform; locally it sizes the parquet shuffles.
     url_buckets: int = 32
-    subj_buckets: int = 32
     # max sub-resources per doc (documentrepository.py:348-352)
     max_resources: int = 1000
-    extra: dict = field(default_factory=dict)
 
     def doc_uri_template(self) -> str:
         return f"{self.base_uri}/res/{self.alias}/{{docid}}"

@@ -84,30 +84,36 @@ class KGResult:
             df.unpersist()
 
 
+def _link_docs(
+    spark: SparkSession, segments: DataFrame, cfg: PipelineConfig
+) -> DataFrame:
+    """The doc rows of `segments` linked against the gazetteer (the
+    emit_doc_triples and emit_sameas_triples input).  Persisted: both
+    emitters read it, and the gazetteer join + fuzzy pass run once."""
+    return link_names(
+        segments.filter(F.col("kind") == "doc").withColumn(
+            "publisher_name", F.col("meta")["publisher_name"]
+        ),
+        gazetteer_df(spark, cfg),
+        cfg,
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _doc_directory(segments: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """(doc_uri, url) of every doc row of `segments` with a docid."""
+    return segments.filter(
+        (F.col("kind") == "doc") & F.col("docid").isNotNull()
+    ).select(doc_uri_col(cfg, F.col("docid")).alias("doc_uri"), "url")
+
+
 def _assemble_triples(
-    spark: SparkSession,
     segments: DataFrame,
     mentions: DataFrame,
+    linked: DataFrame,
     cfg: PipelineConfig,
-    linked: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """(triples_raw, linked_doc_rows, linked, mentions_t) from
-    segment + mention tables.  A caller that already linked exactly
-    these doc rows (the delta tail reusing its delta link pass) can
-    hand the result in to skip the duplicate gazetteer+fuzzy job."""
-    doc_rows = segments.filter(F.col("kind") == "doc")
-    # linked feeds both emit_doc_triples and emit_sameas_triples —
-    # persist so the gazetteer join + fuzzy pass run once
-    if linked is None:
-        linked = link_names(
-            doc_rows.withColumn(
-                "publisher_name", F.col("meta")["publisher_name"]
-            ),
-            gazetteer_df(spark, cfg),
-            cfg,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    docids = doc_rows.select("url", "docid").filter(F.col("docid").isNotNull())
-
+) -> tuple[DataFrame, DataFrame]:
+    """(triples_raw, mentions_t) from segment + mention tables and the
+    linked doc rows of the same documents (`_link_docs`)."""
     # docid is stamped on every segment/mention row at segmentation
     # time, so the |docs|-sized equi-joins the reference's relate
     # step implies simply do not exist here (SURVEY.md §4)
@@ -122,7 +128,7 @@ def _assemble_triples(
         .unionByName(emit_mention_triples(m, cfg))
         .unionByName(emit_sameas_triples(linked, cfg))
     )
-    return triples_raw, docids, linked, m
+    return triples_raw, m
 
 
 def build_kg(
@@ -153,9 +159,8 @@ def _finish_kg(
     incremental == full-rebuild an exact invariant: both feed the
     same deterministic tail, they only differ in how the Python
     stages produced the inputs."""
-    triples_raw, docids, linked, mentions_t = _assemble_triples(
-        spark, segments, mentions, cfg
-    )
+    linked = _link_docs(spark, segments, cfg)
+    triples_raw, mentions_t = _assemble_triples(segments, mentions, linked, cfg)
     # owl:sameAs triples are emitted ONLY by emit_sameas_triples
     # (over the persisted `linked` distinct labels), so CC's input
     # comes straight from that emitter instead of filtering the full
@@ -179,9 +184,7 @@ def _finish_kg(
         StorageLevel.MEMORY_AND_DISK
     )
 
-    doc_directory = docids.select(
-        doc_uri_col(cfg, F.col("docid")).alias("doc_uri"), "url"
-    )
+    doc_directory = _doc_directory(segments, cfg)
     edges = relate_edges(triples, doc_directory)
     warnings = validate_required_predicates(triples).unionByName(
         validate_unique_resources(segments, cfg.max_resources)
@@ -222,12 +225,11 @@ def run_pipeline(
         p("mentions"), lineage, run_id, nb, resume,
     )
 
-    def mk_raw():
-        raw, _, _, _ = _assemble_triples(spark, segments, mentions, cfg)
-        return raw
-
+    raw, _ = _assemble_triples(
+        segments, mentions, _link_docs(spark, segments, cfg), cfg
+    )
     triples_raw = run_bucketed_stage(
-        spark, "emit", with_bucket(mk_raw(), nb, col="subj"),
+        spark, "emit", with_bucket(raw, nb, col="subj"),
         p("triples_raw"), lineage, run_id, nb, resume,
     )
     canon = run_global_stage(
@@ -244,10 +246,7 @@ def run_pipeline(
         lambda: with_bucket(rewrite_triples(triples_raw, canon), nb, col="subj"),
         p("triples"), lineage, run_id, resume,
     )
-    doc_rows = segments.filter(F.col("kind") == "doc")
-    doc_directory = doc_rows.select(
-        doc_uri_col(cfg, F.col("docid")).alias("doc_uri"), "url"
-    ).filter(F.col("doc_uri").isNotNull())
+    doc_directory = _doc_directory(segments, cfg)
     edges = run_global_stage(
         spark, "relate",
         lambda: relate_edges(triples, doc_directory),
@@ -380,14 +379,14 @@ def incremental_kg(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # the key-set count — small vs the corpus (it IS the delta) —
-    # feeds the delta tail's rework shortcut, and materializes the
-    # cache, so every join on the delta keys below is planned from
-    # their exact size (a broadcast, unless the delta is huge)
-    n_delta = delta_urls.count()
-    # delta payload rows: a broadcast semi-join back onto the
-    # snapshot — map-side, so the html column is scanned (from the
-    # caller's cache) but never shuffled
+    # materialize the delta keys before the payload semi-join below
+    # is planned.  Uncounted, they have no size yet, so the join is
+    # planned as a sort-merge: the snapshot, html included, is
+    # shuffled once before AQE switches to a broadcast (1.4 MB for a
+    # 204-page snapshot, seen in the executed plan; a 400-doc recrawl
+    # also ran one more job).  Counted, the join is a map-side
+    # broadcast and the html is scanned but never shuffled
+    delta_urls.count()
     delta_pages = new_pages.join(delta_urls, "url", "left_semi").persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -417,13 +416,14 @@ def incremental_kg(
     ):
         # delta-scoped tail: prior tail tables present, so emit/
         # rewrite/relate run only over touched documents.  The merged
-        # segments table stays UNPERSISTED here — the delta tail
-        # reads only broadcast-filtered slices of it, and a persist
-        # would force a full-corpus cache materialization back into
-        # the rebuild's critical path.
+        # segments table stays UNPERSISTED here — the delta tail cuts
+        # its rework slice from the delta and stored tables and reads
+        # the merged one only for validation, and a persist would
+        # force a full-corpus cache materialization back into the
+        # rebuild's critical path.
         segments = merge(state.segments, d_segments)
         result = _delta_tail(
-            spark, state, delta_urls, n_delta, d_segments, d_mentions,
+            spark, state, delta_urls, d_segments, d_mentions,
             docs, segments, mentions, cfg,
         )
     else:
@@ -444,7 +444,6 @@ def _delta_tail(
     spark: SparkSession,
     state: KGState,
     delta_urls: DataFrame,
-    n_delta: int,
     d_segments: DataFrame,
     d_mentions: DataFrame,
     docs: DataFrame,
@@ -486,21 +485,19 @@ def _delta_tail(
     documentstore.py:400-470 extended to the relate/canonicalize
     stages the reference recomputes globally on every run.
 
-    Join strategies are left to the planner and AQE: the key tables
-    (delta urls, remapped values, rework urls) are cached and counted
-    before their joins are planned, so their statistics are exact."""
+    One rework path serves every recrawl: the rework slice is the
+    delta's own stage rows plus the stored rows of any url beyond the
+    delta that the closure pulled in, which is empty in the common
+    case.  Join strategies are left to the planner and AQE, which
+    reads the cached key tables' sizes at run time; the only actions
+    here are the candidate-label materialization, the label-diff
+    probe and, when labels changed, the CC probe."""
 
     # (1) corpus label table: stored labels for unchanged urls, a
     # fresh gazetteer link for the delta (link_names is per-row
-    # deterministic, so this equals a full relink).  d_linked is
-    # persisted: it feeds the label-diff probe, the label table and
-    # (usually) the emission assembly below.
-    d_doc_rows = d_segments.filter(F.col("kind") == "doc")
-    d_linked = link_names(
-        d_doc_rows.withColumn("publisher_name", F.col("meta")["publisher_name"]),
-        gazetteer_df(spark, cfg),
-        cfg,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # deterministic, so this equals a full relink).  d_linked feeds
+    # the label-diff probe, the label table and the rework slice.
+    d_linked = _link_docs(spark, d_segments, cfg)
     labels_tbl = (
         state.labels.select("url", "entity_label")
         .join(delta_urls, "url", "left_anti")
@@ -547,14 +544,27 @@ def _delta_tail(
         .isEmpty()
     )
 
-    s_vals = None
-    n_s = 0
+    # (3) rework scope: doc URIs whose rows must be re-derived —
+    # changed docs (prior AND new docids: a changed docid may collide
+    # with an unchanged doc's), plus canon-hit docs.  prior_dir is
+    # persisted: the rework scope, the rework slice and the directory
+    # all read it — one stored-segments scan instead of three
+    prior_dir = _doc_directory(state.segments, cfg).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    d_dir = _doc_directory(d_segments, cfg)
+    rework_doc_uris = prior_dir.join(delta_urls, "url", "left_semi").select(
+        "doc_uri"
+    ).union(d_dir.select("doc_uri"))
     if labels_unchanged:
         canon = state.canon
     else:
-        # (3) full-population CC (small: bounded by distinct labels x
+        # full-population CC (small: bounded by distinct labels x
         # mint templates; size-aware inside), then S = stored-value
-        # forms of every node in a touched component
+        # forms of every node in a touched component.  Final triples
+        # have doc-scoped subjects only, so the canon probe needs
+        # just the obj side: a 2-column pruned scan of the prior
+        # table, which keeps nothing when no component remapped
         canon = connected_components(sameas)
         old = state.canon.select("uri", F.col("canon_uri").alias("_old"))
         new = canon.select("uri", F.col("canon_uri").alias("_new"))
@@ -565,78 +575,49 @@ def _delta_tail(
                 != F.coalesce(F.col("_new"), F.col("uri"))
             )
             .select(F.coalesce(F.col("_old"), F.col("uri")).alias("obj"))
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        n_s = s_vals.count()
-
-    # (4) rework scope: doc URIs whose rows must be re-derived —
-    # changed docs (prior AND new docids: a changed docid may collide
-    # with an unchanged doc's), plus canon-hit docs.  Final triples
-    # have doc-scoped subjects only, so the canon probe needs just
-    # the obj side: one broadcast-filtered scan of the prior table.
-    # persisted: consumed twice (delta semi-join + collision closure)
-    # — one stored-segments scan instead of two
-    prior_dir = (
-        state.segments.filter(F.col("kind") == "doc")
-        .select("url", "docid")
-        .filter(F.col("docid").isNotNull())
-        .select(doc_uri_col(cfg, F.col("docid")).alias("doc_uri"), "url")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    rework_doc_uris = prior_dir.join(delta_urls, "url", "left_semi").select(
-        "doc_uri"
-    ).union(
-        d_doc_rows.filter(F.col("docid").isNotNull()).select(
-            doc_uri_col(cfg, F.col("docid")).alias("doc_uri")
-        )
-    )
-    if n_s > 0:
-        # only when some component actually remapped does the prior
-        # table need the canon probe (a 2-column pruned scan)
-        canon_hit = (
-            state.triples.join(s_vals, "obj", "left_semi")
-            .select(_subj_doc(F.col("subj")).alias("doc_uri"))
-            .distinct()
+        canon_hit = state.triples.join(s_vals, "obj", "left_semi").select(
+            _subj_doc(F.col("subj")).alias("doc_uri")
         )
         rework_doc_uris = rework_doc_uris.union(canon_hit)
     rw_uris = rework_doc_uris.distinct().persist(StorageLevel.MEMORY_AND_DISK)
 
-    # every url sharing a rework doc URI is reworked (docid-collision
-    # closure), plus the delta itself
-    rework_urls = (
-        prior_dir.join(rw_uris, "doc_uri", "left_semi")
-        .select("url")
-        .union(delta_urls)
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_rw_urls = rework_urls.count()
-
-    # (5) kept prior triples: subjects owned by untouched docs
+    # (4) kept prior triples: subjects owned by untouched docs
     kept = (
         state.triples.withColumn("_sb", _subj_doc(F.col("subj")))
         .join(rw_uris, F.col("_sb") == F.col("doc_uri"), "left_anti")
         .drop("_sb")
     )
 
-    # (6) re-emit + rewrite ONLY the rework slice.  When the rework
-    # closure added nothing beyond the delta itself (no canon hits,
-    # no docid collisions — the common case; superset + equal count
-    # ⟹ equal sets), the already-persisted delta stage tables ARE
-    # the rework slice: emission runs purely over the delta caches
-    # and reuses d_linked, touching no stored table at all.
-    # Otherwise the slice is cut from the merged tables (broadcast
-    # semi-joins push through the union+anti merge lineage -> one
-    # map-side scan of the stored stage tables).
-    if n_rw_urls == n_delta:
-        rw_segments, rw_mentions, rw_linked_in = d_segments, d_mentions, d_linked
-    else:
-        rw_segments = segments.join(rework_urls, "url", "left_semi")
-        rw_mentions = mentions.join(rework_urls, "url", "left_semi")
-        rw_linked_in = None
-    triples_raw, _docids, rw_linked, rw_mentions_t = _assemble_triples(
-        spark, rw_segments, rw_mentions, cfg, linked=rw_linked_in
+    # (5) re-emit + rewrite ONLY the rework slice: the rows of every
+    # url sharing a rework doc URI (docid-collision closure).  Beyond
+    # the delta, whose stage rows and links are already cached, that
+    # is `extra` — urls reworked for a collision or a canon hit — and
+    # their rows are cut from the stored tables.  Since the delta is
+    # part of the rework set, this equals the merged tables semi-
+    # joined on the rework urls.  `extra` is empty in the common case;
+    # it is persisted so that AQE sees it empty once cached and drops
+    # every stored-table branch before planning their exchanges (a
+    # 60-doc recrawl ran 48 jobs with it unpersisted, 40 persisted)
+    extra = (
+        prior_dir.join(rw_uris, "doc_uri", "left_semi")
+        .select("url")
+        .join(delta_urls, "url", "left_anti")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    e_segments = state.segments.select(*d_segments.columns).join(
+        extra, "url", "left_semi"
+    )
+    e_linked = _link_docs(spark, e_segments, cfg)
+    triples_raw, _ = _assemble_triples(
+        d_segments.unionByName(e_segments),
+        d_mentions.unionByName(
+            state.mentions.select(*d_mentions.columns).join(
+                extra, "url", "left_semi"
+            )
+        ),
+        d_linked.unionByName(e_linked),
+        cfg,
     )
     # persist the REWORK slice only: the kept side is already
     # materialized storage (the prior triples table — parquet in
@@ -653,12 +634,10 @@ def _delta_tail(
     # (identical to a merged-segments projection, without re-scanning
     # the stored segments lineage for every relate_edges join)
     doc_directory = prior_dir.join(delta_urls, "url", "left_anti").unionByName(
-        d_doc_rows.filter(F.col("docid").isNotNull()).select(
-            doc_uri_col(cfg, F.col("docid")).alias("doc_uri"), "url"
-        )
+        d_dir
     )
 
-    # (7) edges: prior edge rows survive iff neither endpoint doc was
+    # (6) edges: prior edge rows survive iff neither endpoint doc was
     # reworked; reworked sources re-relate from their new refs, and
     # kept docs citing a reworked target re-resolve against the new
     # directory.  The three classes partition edges by endpoint
@@ -702,10 +681,5 @@ def _delta_tail(
     return KGResult(
         docs, segments, mentions, triples, canon, edges, sameas, doc_directory,
         warnings, labels_tbl, corpus_mentions_t,
-        cached=tuple(
-            df for df in (
-                d_linked, cand, rw_linked, s_vals, prior_dir,
-                rw_uris, rework_urls, rework,
-            ) if df is not None
-        ),
+        cached=(d_linked, cand, prior_dir, rw_uris, extra, e_linked, rework),
     )
