@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ferenda_spark.config import DCT, OWL_SAMEAS, RDF_TYPE, PipelineConfig
 
 
-def _doc_part(uri_col):
+def doc_part(uri_col):
     """Strip a fragment: the owning resource of '<doc>#S1.2' is '<doc>'."""
     return F.split(uri_col, "#", 2).getItem(0)
 
@@ -53,8 +53,8 @@ def relate_edges(triples: DataFrame, doc_directory: DataFrame) -> DataFrame:
         triples.filter(F.col("obj_is_uri"))
         .filter(~F.col("pred").isin([RDF_TYPE, OWL_SAMEAS]))
         .select(
-            _doc_part(F.col("subj")).alias("src_uri"),
-            _doc_part(F.col("obj")).alias("dst_uri"),
+            doc_part(F.col("subj")).alias("src_uri"),
+            doc_part(F.col("obj")).alias("dst_uri"),
             "pred",
         )
         .filter(F.col("src_uri") != F.col("dst_uri"))
@@ -97,7 +97,7 @@ def annotations(triples: DataFrame, max_depth: int = 3) -> DataFrame:
     # keep only roots that are docs (no '#')
     closure = closure.filter(~F.col("root").contains("#")).distinct()
     self_rows = (
-        triples.select(_doc_part(F.col("subj")).alias("root"))
+        triples.select(doc_part(F.col("subj")).alias("root"))
         .filter(~F.col("root").contains("#"))
         .distinct()
         .select(F.col("root").alias("part"), F.col("root"))

@@ -8,11 +8,16 @@ restated as a sequence of DataFrame jobs:
         --mentions--> mentions --link/mint/emit--> triples_raw
         --CC--> canon --rewrite--> triples --relate--> edges
 
-Two modes:
+The sequence is written once (`_kg`); the two modes differ only in
+what happens at each stage's cut:
 - build_kg(): fully lazy, in-memory (tests, benchmarks of raw
-  throughput) — one persisted cut at `segments` (consumed 3×).
-- run_pipeline(): materialized, each stage written bucketed-by-url
-  with per-partition lineage rows -> checkpoint-resume (north rule).
+  throughput) — persisted cuts at `segments` (consumed 3×), the
+  linked doc rows and the final triples.
+- run_pipeline(): materialized, each stage written (bucketed by url
+  or subject where the stage is per-document) with lineage rows ->
+  checkpoint-resume (north rule).
+Both return the same triples and edges, and both carry the tables the
+delta-scoped recrawl (`incremental_kg`) reads back.
 """
 
 from __future__ import annotations
@@ -38,7 +43,7 @@ from ferenda_spark.operators.emit import (
 from ferenda_spark.operators.extract import extract_docs
 from ferenda_spark.operators.link import gazetteer_df, link_names
 from ferenda_spark.operators.mentions import detect_mentions, mention_target_uri
-from ferenda_spark.operators.relate import relate_edges
+from ferenda_spark.operators.relate import doc_part, relate_edges
 from ferenda_spark.operators.segment import segment_sections
 from ferenda_spark.streaming.resume import (
     new_run_id,
@@ -58,21 +63,20 @@ class KGResult:
     edges: DataFrame
     # CC input + url directory — exposed so downstream oracles can
     # independently recompute canon/edges from the same inputs
-    sameas: DataFrame | None = None
-    doc_directory: DataFrame | None = None
+    sameas: DataFrame
+    doc_directory: DataFrame
     # T4 + T5 validation warnings (subject, warning)
-    warnings: DataFrame | None = None
+    warnings: DataFrame
     # emission inputs — exposed so the kg_triples oracle can
     # independently recompute emit -> CC -> rewrite in SQL from the
     # SAME upstream tables (the Python FSM/link stages stay
     # golden-pytest-checked; the relational layer gets a DuckDB twin).
     # `linked` is the linked doc rows (the emit_doc_triples input) for
-    # build_kg and run_pipeline-shaped results only: an incremental_kg
-    # result with the delta-scoped tail carries the corpus-wide
-    # 2-column (url, entity_label) label table here instead, which is
-    # all kg_state and emit_sameas_triples read
-    linked: DataFrame | None = None
-    mentions_t: DataFrame | None = None
+    # build_kg and run_pipeline results: an incremental_kg result
+    # carries the corpus-wide 2-column (url, entity_label) label table
+    # here instead, which is all kg_state and emit_sameas_triples read
+    linked: DataFrame
+    mentions_t: DataFrame
     # every DataFrame the build persisted — a long-running caller
     # (streaming/maintain.py applies one build per micro-batch,
     # forever) unpersists these after materializing, or executor
@@ -131,36 +135,20 @@ def _assemble_triples(
     return triples_raw, m
 
 
-def build_kg(
-    spark: SparkSession,
-    pages: DataFrame,
-    cfg: PipelineConfig | None = None,
-    extra_sameas: DataFrame | None = None,
-) -> KGResult:
-    """Lazy in-memory pipeline (no intermediate tables)."""
-    cfg = cfg or PipelineConfig()
-    docs = extract_docs(pages)
-    segments = segment_sections(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    mentions = detect_mentions(segments)
-    return _finish_kg(spark, docs, segments, mentions, cfg, extra_sameas)
+def _kg(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig, cut) -> KGResult:
+    """The stage sequence, written once for both modes.
 
-
-def _finish_kg(
-    spark: SparkSession,
-    docs: DataFrame,
-    segments: DataFrame,
-    mentions: DataFrame,
-    cfg: PipelineConfig,
-    extra_sameas: DataFrame | None = None,
-) -> KGResult:
-    """Relational tail of the pipeline (emit → CC → rewrite →
-    relate → validate) over ANY segments/mentions tables — shared by
-    the full build and the incremental rebuild, which is what makes
-    incremental == full-rebuild an exact invariant: both feed the
-    same deterministic tail, they only differ in how the Python
-    stages produced the inputs."""
+    `cut(stage, make, key)` returns a stage's output table: `make()`
+    plans it, and `key` names the column a stored copy is bucketed by
+    (None for a global stage).  The cut is where that output becomes
+    reusable, in memory for build_kg and as a stored, resumable table
+    for run_pipeline."""
+    docs = cut("extract", lambda: extract_docs(pages), "url")
+    segments = cut("segment", lambda: segment_sections(docs), "url")
+    mentions = cut("mentions", lambda: detect_mentions(segments), "url")
     linked = _link_docs(spark, segments, cfg)
-    triples_raw, mentions_t = _assemble_triples(segments, mentions, linked, cfg)
+    raw, mentions_t = _assemble_triples(segments, mentions, linked, cfg)
+    triples_raw = cut("emit", lambda: raw, "subj")
     # owl:sameAs triples are emitted ONLY by emit_sameas_triples
     # (over the persisted `linked` distinct labels), so CC's input
     # comes straight from that emitter instead of filtering the full
@@ -173,26 +161,60 @@ def _finish_kg(
     sameas = emit_sameas_triples(linked, cfg).select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
-    if extra_sameas is not None:
-        sameas = sameas.unionByName(extra_sameas.select("src", "dst"))
-    canon = connected_components(sameas)
-    # triples is the fan-out point (caller count, relate_edges,
-    # validations all read it) — persist HERE, the canonical final
-    # table, rather than the pre-rewrite raw union: one full
-    # materialization instead of two
-    triples = rewrite_triples(triples_raw, canon).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
+    canon = cut("canonicalize", lambda: connected_components(sameas), None)
+    triples = cut("rewrite", lambda: rewrite_triples(triples_raw, canon), None)
     doc_directory = _doc_directory(segments, cfg)
-    edges = relate_edges(triples, doc_directory)
-    warnings = validate_required_predicates(triples).unionByName(
-        validate_unique_resources(segments, cfg.max_resources)
+    edges = cut("relate", lambda: relate_edges(triples, doc_directory), None)
+    # T4/T5 validation stage (the reference logs-and-continues; the
+    # count is the metric)
+    warnings = cut(
+        "validate",
+        lambda: validate_required_predicates(triples).unionByName(
+            validate_unique_resources(segments, cfg.max_resources)
+        ),
+        None,
     )
     return KGResult(
         docs, segments, mentions, triples, canon, edges, sameas, doc_directory,
-        warnings, linked, mentions_t, cached=(segments, linked, triples),
+        warnings, linked, mentions_t, cached=(linked,),
     )
+
+
+def build_kg(
+    spark: SparkSession,
+    pages: DataFrame,
+    cfg: PipelineConfig | None = None,
+) -> KGResult:
+    """Lazy in-memory pipeline (no intermediate tables).  Two cuts are
+    persisted: `segments` (read by mentions, link, emit, the directory
+    and validation) and the final `triples`, the fan-out point (caller
+    count, relate, validation) — the canonical table rather than the
+    pre-rewrite raw union: one full materialization instead of two."""
+    persisted = []
+
+    def cut(stage, make, key):
+        df = make()
+        if stage in ("segment", "rewrite"):
+            df = df.persist(StorageLevel.MEMORY_AND_DISK)
+            persisted.append(df)
+        return df
+
+    kg = _kg(spark, pages, cfg or PipelineConfig(), cut)
+    kg.cached += tuple(persisted)
+    return kg
+
+
+#: stage -> the table run_pipeline stores its output in
+_STAGE_TABLE = {
+    "extract": "docs",
+    "segment": "segments",
+    "mentions": "mentions",
+    "emit": "triples_raw",
+    "canonicalize": "canon",
+    "rewrite": "triples",
+    "relate": "edges",
+    "validate": "warnings",
+}
 
 
 def run_pipeline(
@@ -203,71 +225,25 @@ def run_pipeline(
     run_id: str | None = None,
     resume: bool = True,
 ) -> KGResult:
-    """Materialized pipeline with per-bucket lineage + resume."""
+    """Materialized pipeline with per-bucket lineage + resume: each
+    stage of build_kg's sequence is written under `out_root` and read
+    back, a bucketed stage one `url_bucket` partition per bucket, and
+    a stage already recorded in the lineage table is not recomputed."""
     cfg = cfg or PipelineConfig()
     run_id = run_id or new_run_id()
     nb = cfg.url_buckets
     lineage = os.path.join(out_root, "lineage")
 
-    def p(name: str) -> str:
-        return os.path.join(out_root, name)
+    def cut(stage, make, key):
+        out = os.path.join(out_root, _STAGE_TABLE[stage])
+        if key is None:
+            return run_global_stage(spark, stage, make, out, lineage, run_id, resume)
+        return run_bucketed_stage(
+            spark, stage, with_bucket(make(), nb, col=key), out, lineage, run_id,
+            nb, resume,
+        )
 
-    docs = run_bucketed_stage(
-        spark, "extract", with_bucket(extract_docs(pages), nb),
-        p("docs"), lineage, run_id, nb, resume,
-    )
-    segments = run_bucketed_stage(
-        spark, "segment", with_bucket(segment_sections(docs), nb),
-        p("segments"), lineage, run_id, nb, resume,
-    )
-    mentions = run_bucketed_stage(
-        spark, "mentions", with_bucket(detect_mentions(segments), nb),
-        p("mentions"), lineage, run_id, nb, resume,
-    )
-
-    raw, _ = _assemble_triples(
-        segments, mentions, _link_docs(spark, segments, cfg), cfg
-    )
-    triples_raw = run_bucketed_stage(
-        spark, "emit", with_bucket(raw, nb, col="subj"),
-        p("triples_raw"), lineage, run_id, nb, resume,
-    )
-    canon = run_global_stage(
-        spark, "canonicalize",
-        lambda: connected_components(
-            triples_raw.filter(F.col("pred") == OWL_SAMEAS).select(
-                F.col("subj").alias("src"), F.col("obj").alias("dst")
-            )
-        ),
-        p("canon"), lineage, run_id, resume,
-    )
-    triples = run_global_stage(
-        spark, "rewrite",
-        lambda: with_bucket(rewrite_triples(triples_raw, canon), nb, col="subj"),
-        p("triples"), lineage, run_id, resume,
-    )
-    doc_directory = _doc_directory(segments, cfg)
-    edges = run_global_stage(
-        spark, "relate",
-        lambda: relate_edges(triples, doc_directory),
-        p("edges"), lineage, run_id, resume,
-    )
-    sameas = triples_raw.filter(F.col("pred") == OWL_SAMEAS).select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    # T4/T5 validation stage: warnings materialize next to the data
-    # (the reference logs-and-continues; the count is the metric)
-    warnings = run_global_stage(
-        spark, "validate",
-        lambda: validate_required_predicates(triples).unionByName(
-            validate_unique_resources(segments, cfg.max_resources)
-        ),
-        p("warnings"), lineage, run_id, resume,
-    )
-    return KGResult(
-        docs, segments, mentions, triples, canon, edges, sameas, doc_directory,
-        warnings,
-    )
+    return _kg(spark, pages, cfg, cut)
 
 
 # ------------------------------------------------- incremental rebuild
@@ -276,27 +252,24 @@ def run_pipeline(
 @dataclass
 class KGState:
     """Prior-build state the incremental rebuild needs: the stored
-    Python-stage outputs plus per-url content fingerprints.  In
-    production these are the `docs`/`segments`/`mentions` Iceberg
-    tables run_pipeline already materializes, and `fingerprints` is
-    a 2-column projection of the prior pages snapshot — the
-    DataFrame analog of the reference's DocumentEntry.orig_updated
-    record (documententry.py:50; documentstore.py:400-470).
-
-    The optional tail tables (labels/canon/triples/edges — all
-    run_pipeline/Iceberg materializations too) switch the relational
-    tail from global recomputation to the delta-scoped rebuild in
-    `_delta_tail`; when any is absent the rebuild falls back to the
-    always-correct global tail (`_finish_kg`)."""
+    Python-stage outputs, per-url content fingerprints, and the tail
+    tables the delta-scoped relational tail (`_delta_tail`) reuses.
+    In production these are the tables run_pipeline materializes
+    (Iceberg at deployment), and `fingerprints` is a 2-column
+    projection of the prior pages snapshot — the DataFrame analog of
+    the reference's DocumentEntry.orig_updated record
+    (documententry.py:50; documentstore.py:400-470).  Every producer
+    (build_kg, run_pipeline, incremental_kg via kg_state, and
+    streaming/maintain.py's stored versions) carries all eight."""
 
     fingerprints: DataFrame  # (url, page_fp)
     docs: DataFrame
     segments: DataFrame
     mentions: DataFrame
-    labels: DataFrame | None = None  # (url, entity_label) of prior linked
-    canon: DataFrame | None = None  # (uri, canon_uri) prior CC output
-    triples: DataFrame | None = None  # prior FINAL (post-rewrite) triples
-    edges: DataFrame | None = None  # prior relate output
+    labels: DataFrame  # (url, entity_label) of prior linked
+    canon: DataFrame  # (uri, canon_uri) prior CC output
+    triples: DataFrame  # prior FINAL (post-rewrite) triples
+    edges: DataFrame  # prior relate output
 
 
 def _fp_expr() -> F.Column:
@@ -324,14 +297,10 @@ def kg_state(pages: DataFrame, kg: KGResult) -> KGState:
         kg.docs,
         kg.segments,
         kg.mentions,
-        labels=(
-            kg.linked.select("url", "entity_label")
-            if kg.linked is not None
-            else None
-        ),
-        canon=kg.canon,
-        triples=kg.triples,
-        edges=kg.edges,
+        kg.linked.select("url", "entity_label"),
+        kg.canon,
+        kg.triples,
+        kg.edges,
     )
 
 
@@ -348,11 +317,10 @@ def incremental_kg(
     measured >90% of build cost) run ONLY over pages whose content
     fingerprint changed or that were never seen; unchanged and
     not-recrawled urls reuse their stored stage rows verbatim.  The
-    relational tail is delta-scoped too when the prior tail tables
-    are available (see _delta_tail: canonicalization stays a global
-    FIXPOINT — the CC still sees the full sameAs population — but
-    only touched components and touched documents are re-derived);
-    without them it falls back to the global _finish_kg tail.  Work
+    relational tail is delta-scoped too (see _delta_tail:
+    canonicalization stays a global FIXPOINT — the CC still sees the
+    full sameAs population — but only touched components and touched
+    documents are re-derived).  Work
     scales as O(|delta|) Python + O(|delta|) emit/rewrite + a few
     narrow-column corpus scans, the right split at 10^12 pages where
     the recrawl delta is a small fraction.
@@ -409,35 +377,18 @@ def incremental_kg(
 
     docs = merge(state.docs, d_docs)
     mentions = merge(state.mentions, d_mentions)
-    if (
-        state.labels is not None
-        and state.canon is not None
-        and state.triples is not None
-    ):
-        # delta-scoped tail: prior tail tables present, so emit/
-        # rewrite/relate run only over touched documents.  The merged
-        # segments table stays UNPERSISTED here — the delta tail cuts
-        # its rework slice from the delta and stored tables and reads
-        # the merged one only for validation, and a persist would
-        # force a full-corpus cache materialization back into the
-        # rebuild's critical path.
-        segments = merge(state.segments, d_segments)
-        result = _delta_tail(
-            spark, state, delta_urls, d_segments, d_mentions,
-            docs, segments, mentions, cfg,
-        )
-    else:
-        segments = merge(state.segments, d_segments).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        result = _finish_kg(spark, docs, segments, mentions, cfg)
+    # the merged segments table stays UNPERSISTED: the delta tail cuts
+    # its rework slice from the delta and stored tables and reads the
+    # merged one only for validation, and a persist would force a
+    # full-corpus cache materialization back into the rebuild's
+    # critical path
+    segments = merge(state.segments, d_segments)
+    result = _delta_tail(
+        spark, state, delta_urls, d_segments, d_mentions,
+        docs, segments, mentions, cfg,
+    )
     result.cached = result.cached + (delta_pages, d_segments, delta_urls)
     return result, delta_urls
-
-
-def _subj_doc(col: F.Column) -> F.Column:
-    """Owning doc URI of a (possibly '#frag'-suffixed) resource."""
-    return F.split(col, "#", 2).getItem(0)
 
 
 def _delta_tail(
@@ -451,8 +402,8 @@ def _delta_tail(
     mentions: DataFrame,
     cfg: PipelineConfig,
 ) -> KGResult:
-    """Delta-scoped relational tail: identical output to _finish_kg
-    over the merged tables (tests/test_incremental.py asserts
+    """Delta-scoped relational tail: identical output to the tail of
+    `_kg` over the merged tables (tests/test_incremental.py asserts
     multiset equality against a full rebuild), with work bounded by
     the touched-document set instead of the corpus.
 
@@ -577,14 +528,14 @@ def _delta_tail(
             .select(F.coalesce(F.col("_old"), F.col("uri")).alias("obj"))
         )
         canon_hit = state.triples.join(s_vals, "obj", "left_semi").select(
-            _subj_doc(F.col("subj")).alias("doc_uri")
+            doc_part(F.col("subj")).alias("doc_uri")
         )
         rework_doc_uris = rework_doc_uris.union(canon_hit)
     rw_uris = rework_doc_uris.distinct().persist(StorageLevel.MEMORY_AND_DISK)
 
     # (4) kept prior triples: subjects owned by untouched docs
     kept = (
-        state.triples.withColumn("_sb", _subj_doc(F.col("subj")))
+        state.triples.withColumn("_sb", doc_part(F.col("subj")))
         .join(rw_uris, F.col("_sb") == F.col("doc_uri"), "left_anti")
         .drop("_sb")
     )
@@ -643,30 +594,27 @@ def _delta_tail(
     # directory.  The three classes partition edges by endpoint
     # membership; the terminal dropDuplicates collapses docid-
     # collision residue exactly like the full relate does.
-    if state.edges is not None:
-        kept_edges = (
-            state.edges
-            .join(rw_uris, F.col("src_uri") == F.col("doc_uri"), "left_anti")
-            .join(rw_uris, F.col("dst_uri") == F.col("doc_uri"), "left_anti")
+    kept_edges = (
+        state.edges
+        .join(rw_uris, F.col("src_uri") == F.col("doc_uri"), "left_anti")
+        .join(rw_uris, F.col("dst_uri") == F.col("doc_uri"), "left_anti")
+    )
+    add_src = relate_edges(rework, doc_directory)
+    kept_hit = (
+        kept.filter(
+            F.col("obj_is_uri")
+            & ~F.col("pred").isin([RDF_TYPE, OWL_SAMEAS])
         )
-        add_src = relate_edges(rework, doc_directory)
-        kept_hit = (
-            kept.filter(
-                F.col("obj_is_uri")
-                & ~F.col("pred").isin([RDF_TYPE, OWL_SAMEAS])
-            )
-            .withColumn("_ob", _subj_doc(F.col("obj")))
-            .join(rw_uris, F.col("_ob") == F.col("doc_uri"), "left_semi")
-            .drop("_ob")
-        )
-        add_dst = relate_edges(kept_hit, doc_directory)
-        edges = (
-            kept_edges.unionByName(add_src)
-            .unionByName(add_dst)
-            .dropDuplicates(["src_url", "dst_url", "pred"])
-        )
-    else:
-        edges = relate_edges(triples, doc_directory)
+        .withColumn("_ob", doc_part(F.col("obj")))
+        .join(rw_uris, F.col("_ob") == F.col("doc_uri"), "left_semi")
+        .drop("_ob")
+    )
+    add_dst = relate_edges(kept_hit, doc_directory)
+    edges = (
+        kept_edges.unionByName(add_src)
+        .unionByName(add_dst)
+        .dropDuplicates(["src_url", "dst_url", "pred"])
+    )
 
     warnings = validate_required_predicates(triples).unionByName(
         validate_unique_resources(segments, cfg.max_resources)

@@ -28,6 +28,7 @@ State layout under ``state_root``::
     v{n}/fingerprints/   ← (url, page_fp) for every url ever seen
     v{n}/docs|segments|mentions/   ← stored Python-stage outputs
     v{n}/triples/        ← the materialized canonical graph
+    v{n}/labels|canon|edges/   ← the rest of the recrawl's tail tables
     v{n}/meta.json       ← batch id, mode, delta/triple counts
 
 Versions are pruned to ``retain`` after each successful commit —
@@ -57,12 +58,11 @@ from ferenda_spark.pipeline import (
     page_fingerprints,
 )
 from ferenda_spark.streaming.ingest import stream_pages
-from ferenda_spark.streaming.resume import fs_exists
 
 STATE_TABLES = ("fingerprints", "docs", "segments", "mentions")
-#: prior-tail tables that switch incremental_kg onto the delta-scoped
-#: relational tail (pipeline._delta_tail); optional — a state dir
-#: from an older version simply falls back to the global tail
+#: prior-tail tables the recrawl's delta-scoped relational tail
+#: (pipeline._delta_tail) reuses; every version stores them, the
+#: bootstrap included
 TAIL_TABLES = ("labels", "canon", "triples", "edges")
 
 
@@ -85,13 +85,11 @@ def _vdir(state_root: str, version: int, name: str = "") -> str:
 
 
 def load_state(spark: SparkSession, state_root: str, version: int) -> KGState:
-    tail = {}
-    for t in TAIL_TABLES:
-        p = _vdir(state_root, version, t)
-        tail[t] = spark.read.parquet(p) if fs_exists(spark, p) else None
     return KGState(
-        *[spark.read.parquet(_vdir(state_root, version, t)) for t in STATE_TABLES],
-        **tail,
+        *[
+            spark.read.parquet(_vdir(state_root, version, t))
+            for t in STATE_TABLES + TAIL_TABLES
+        ]
     )
 
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 import time
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -84,7 +84,8 @@ def run_bucketed_stage(
 
     Pending buckets commit in `commit_chunks` independent jobs, each
     followed immediately by its own lineage append with real
-    per-chunk timestamps — a kill mid-stage loses at most the
+    per-chunk timestamps and per-bucket row counts (observed on the
+    write, not read back) — a kill mid-stage loses at most the
     in-flight chunk, and already-committed chunks are reused on
     resume (the per-bucket lineage promise holds *within* a stage,
     not just between stages).  The stage input is persisted across
@@ -104,20 +105,16 @@ def run_bucketed_stage(
         for lo in range(0, len(pending), per_chunk):
             chunk = pending[lo : lo + per_chunk]
             started = datetime.now(timezone.utc)
-            cached.filter(F.col("url_bucket").isin(chunk)).write.mode(
-                "overwrite"
-            ).partitionBy("url_bucket").parquet(out_path)
+            # per-bucket row counts ride on the write itself
+            counts = Observation()
+            cached.filter(F.col("url_bucket").isin(chunk)).observe(
+                counts,
+                *[F.count_if(F.col("url_bucket") == b).alias(str(b)) for b in chunk],
+            ).write.mode("overwrite").partitionBy("url_bucket").parquet(out_path)
             finished = datetime.now(timezone.utc)
-            counts = {
-                r["url_bucket"]: r["count"]
-                for r in spark.read.parquet(out_path)
-                .filter(F.col("url_bucket").isin(chunk))
-                .groupBy("url_bucket")
-                .count()
-                .collect()
-            }
+            n = counts.get
             rows = [
-                (run_id, stage, int(b), int(counts.get(b, 0)), started, finished, "ok")
+                (run_id, stage, int(b), int(n[str(b)]), started, finished, "ok")
                 for b in chunk
             ]
             local_frame(spark, rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
@@ -137,7 +134,8 @@ def run_global_stage(
     resume: bool = True,
 ) -> DataFrame:
     """Non-bucketed stage (CC, global dedup): one lineage row with
-    partition_id=-1; skipped entirely when already ok."""
+    partition_id=-1 and the row count observed on the write; skipped
+    entirely when already ok."""
     if (
         resume
         and -1 in done_buckets(spark, lineage_path, stage)
@@ -145,10 +143,12 @@ def run_global_stage(
     ):
         return spark.read.parquet(out_path)
     started = datetime.now(timezone.utc)
-    df = df_fn()
-    df.write.mode("overwrite").parquet(out_path)
+    count = Observation()
+    df_fn().observe(count, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(out_path)
     finished = datetime.now(timezone.utc)
-    n = spark.read.parquet(out_path).count()
+    n = count.get["n"]
     local_frame(
         spark, [(run_id, stage, -1, int(n), started, finished, "ok")], LINEAGE_SCHEMA
     ).coalesce(1).write.mode("append").parquet(lineage_path)
@@ -196,11 +196,6 @@ def _fs_path(spark: SparkSession, path: str):
     `file://`, `hdfs://` or `s3a://` root probes as a local path does."""
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def fs_exists(spark: SparkSession, path: str) -> bool:
-    fs, p = _fs_path(spark, path)
-    return fs.exists(p)
 
 
 def _exists(spark: SparkSession, path: str) -> bool:

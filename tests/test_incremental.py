@@ -8,7 +8,6 @@ observationally invisible).  Also asserts the efficiency contract:
 the Python stages run only over the delta.
 """
 
-import dataclasses
 import re
 
 import pytest
@@ -83,7 +82,7 @@ def test_chained_incremental_stays_delta_scoped(spark, v1):
     inc2.triples.count()
 
     st2 = kg_state(pages2, inc2)
-    # the gate that selects _delta_tail over the global fallback
+    # the tail tables the next round's _delta_tail reads
     assert st2.labels is not None
     assert st2.canon is not None and st2.triples is not None
     assert st2.edges is not None
@@ -165,20 +164,6 @@ def test_docid_collision_reworks_an_unchanged_url(spark, v1, v2):
     )
     assert len(owners) == 1
     assert set(owners[0].urls) == {page.url, copy["url"]}
-
-    assert _triples(inc) == _triples(full)
-    assert inc.triples.count() == full.triples.count()
-    assert _edges(inc) == _edges(full)
-
-
-def test_incremental_without_tail_tables_equals_full_rebuild(spark, v1, v2):
-    """A state without the prior tail tables (what run_pipeline's
-    outputs give) takes the global _finish_kg tail, and still equals
-    the full rebuild."""
-    pages1, kg1 = v1
-    pages2, full = v2
-    state = dataclasses.replace(kg_state(pages1, kg1), labels=None)
-    inc, _ = incremental_kg(spark, pages2, state)
 
     assert _triples(inc) == _triples(full)
     assert inc.triples.count() == full.triples.count()
