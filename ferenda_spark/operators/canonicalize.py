@@ -98,8 +98,12 @@ def _driver_cc(spark, rows) -> DataFrame:
     return local_frame(spark, out, "uri string, canon_uri string")
 
 
+#: cap on the distributed path's star rounds (it converges in O(log d))
+MAX_STAR_ROUNDS = 30
+
+
 def connected_components(
-    edges: DataFrame, max_iter: int = 30, driver_threshold: int = 100_000
+    edges: DataFrame, driver_threshold: int = 100_000
 ) -> DataFrame:
     """edges(src, dst) -> canon_map(uri, canon_uri).
 
@@ -132,7 +136,7 @@ def connected_components(
         return _driver_cc(e.sparkSession, probe)
     e = e.localCheckpoint(eager=True)
     prev_sig = None
-    for i in range(max_iter):
+    for i in range(MAX_STAR_ROUNDS):
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
         # convergence probe every OTHER round: the probe is a driver
         # action, and on a shrinking edge set an extra star round is

@@ -46,6 +46,7 @@ from ferenda_spark.operators.mentions import detect_mentions, mention_target_uri
 from ferenda_spark.operators.relate import doc_part, relate_edges
 from ferenda_spark.operators.segment import segment_sections
 from ferenda_spark.streaming.resume import (
+    done_parts,
     new_run_id,
     run_bucketed_stage,
     run_global_stage,
@@ -228,19 +229,21 @@ def run_pipeline(
     """Materialized pipeline with per-bucket lineage + resume: each
     stage of build_kg's sequence is written under `out_root` and read
     back, a bucketed stage one `url_bucket` partition per bucket, and
-    a stage already recorded in the lineage table is not recomputed."""
+    a stage bucket the lineage table (read once) records is skipped."""
     cfg = cfg or PipelineConfig()
     run_id = run_id or new_run_id()
     nb = cfg.url_buckets
     lineage = os.path.join(out_root, "lineage")
+    done = done_parts(spark, lineage) if resume else {}
 
     def cut(stage, make, key):
         out = os.path.join(out_root, _STAGE_TABLE[stage])
+        ok = done.get(stage, set())
         if key is None:
-            return run_global_stage(spark, stage, make, out, lineage, run_id, resume)
+            return run_global_stage(spark, stage, make, out, lineage, run_id, ok)
         return run_bucketed_stage(
             spark, stage, with_bucket(make(), nb, col=key), out, lineage, run_id,
-            nb, resume,
+            nb, ok,
         )
 
     return _kg(spark, pages, cfg, cut)
@@ -272,7 +275,7 @@ class KGState:
     edges: DataFrame  # prior relate output
 
 
-def _fp_expr() -> F.Column:
+def page_fp_expr() -> F.Column:
     return F.sha2(
         F.coalesce(
             F.col("html"), F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8")
@@ -286,7 +289,7 @@ def page_fingerprints(pages: DataFrame) -> DataFrame:
     to the utf-8 text for html-less rows) — the same content-change
     test as streaming/stateful._fingerprint, as a pure column expr
     so it pushes into the pages scan."""
-    return pages.select("url", _fp_expr().alias("page_fp"))
+    return pages.select("url", page_fp_expr().alias("page_fp"))
 
 
 def kg_state(pages: DataFrame, kg: KGResult) -> KGState:
@@ -338,7 +341,7 @@ def incremental_kg(
     # 2 short columns, never the html payload (at 100 TB the
     # payload-through-shuffle variant IS the pipeline's cost)
     delta_urls = (
-        new_pages.select("url", _fp_expr().alias("_fp"))
+        new_pages.select("url", page_fp_expr().alias("_fp"))
         .join(prior_fp, "url", "left")
         .filter(
             F.col("_prior_fp").isNull() | (F.col("_fp") != F.col("_prior_fp"))

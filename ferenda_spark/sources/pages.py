@@ -15,7 +15,6 @@ corpus, so bench-scale corpora (10^5-10^6 docs) build in parallel.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ferenda_spark.config import PipelineConfig
@@ -151,13 +150,3 @@ def write_bucketed_table(
     if path:
         w = w.option("path", path)
     w.saveAsTable(name)
-
-
-def with_url_bucket(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Stable hash bucket on url-host — the parquet stand-in for the
-    Iceberg `bucket(N, url_host)` partition transform (north rule:
-    hash partitioning on url-host for intra-site locality)."""
-    host = F.parse_url(F.col("url"), F.lit("HOST"))
-    return df.withColumn(
-        "url_bucket", F.pmod(F.xxhash64(host), F.lit(cfg.url_buckets)).cast("int")
-    )

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ferenda_spark.operators.extract import extract_docs
+from ferenda_spark.pipeline import page_fp_expr
 from ferenda_spark.sources.pages import PAGES_SCHEMA
 
 
@@ -53,8 +54,8 @@ def run_extract_stream(
     """pages stream → extract stage → parquet sink, processing all
     available input then stopping (Trigger.AvailableNow).  Re-running
     after new files land processes only the new files — the streaming
-    twin of resume.run_bucketed_stage's lineage anti-join.  Blocks
-    until the batch drains."""
+    twin of run_pipeline skipping the buckets its lineage records
+    done.  Blocks until the batch drains."""
     docs = extract_docs(stream_pages(spark, pages_dir, max_files))
     q = (
         docs.writeStream.format("parquet")
@@ -163,15 +164,8 @@ def dedup_pages_stream(
     (pipeline.page_fingerprints), so stream and batch agree on what
     "changed" means.  The batch twin of this operator is
     dropDuplicates on the same key (catalog `dedup_exact`)."""
-    fp = F.sha2(
-        F.coalesce(
-            F.col("html"),
-            F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8"),
-        ),
-        256,
-    )
     return (
-        pages.withColumn("_fp", fp)
+        pages.withColumn("_fp", page_fp_expr())
         .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["url", "_fp"])
         .drop("_fp")

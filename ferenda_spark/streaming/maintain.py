@@ -46,7 +46,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ferenda_spark.config import PipelineConfig
@@ -162,8 +162,11 @@ def apply_batch(
     _merged_fingerprints(prior_fp, batch).write.parquet(
         _vdir(state_root, batch_id, "fingerprints")
     )
-    n_triples = kg.triples.count()
-    kg.triples.write.parquet(_vdir(state_root, batch_id, "triples"))
+    # the triple count rides on the write itself
+    triple_count = Observation()
+    kg.triples.observe(triple_count, F.count(F.lit(1)).alias("n")).write.parquet(
+        _vdir(state_root, batch_id, "triples")
+    )
     # tail tables: the next batch's delta-scoped relational tail
     # (labels = corpus-wide (url, entity_label); canon map; relate
     # edges — all production outputs anyway)
@@ -178,7 +181,7 @@ def apply_batch(
                 "batch_id": batch_id,
                 "mode": mode,
                 "delta_urls": n_delta,
-                "triples": n_triples,
+                "triples": triple_count.get["n"],
                 "prior_version": prior_v,
             },
             f,

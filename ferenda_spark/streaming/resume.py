@@ -11,8 +11,8 @@ re-process only stale documents. The Spark restatement (north rule:
   idempotent;
 - after each bucket lands, a lineage row (run_id, stage, bucket,
   n_rows, started, finished, status) is appended;
-- on resume, the pending set = all buckets ANTI-JOIN lineage 'ok'
-  rows for that stage — only unfinished buckets recompute.
+- lineage is read once per run (`done_parts`); each stage writer
+  skips the buckets in its stage's done set, recomputing the rest.
 
 At 10^12 pages the bucket count rises and buckets become Iceberg
 partitions; the mechanism is unchanged.
@@ -48,23 +48,19 @@ def with_bucket(df: DataFrame, n_buckets: int, col: str = "url") -> DataFrame:
     )
 
 
-def read_lineage(spark: SparkSession, lineage_path: str) -> DataFrame | None:
-    if not _exists(spark, lineage_path):
-        return None
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+def done_parts(spark: SparkSession, lineage_path: str) -> dict[str, set[int]]:
+    """stage -> the partition ids recorded ok (-1 for a global stage)."""
+    done: dict[str, set[int]] = {}
+    if _exists(spark, lineage_path):
+        lin = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+        ok = lin.filter(F.col("status") == "ok").select("stage", "partition_id")
+        for r in ok.distinct().collect():
+            done.setdefault(r["stage"], set()).add(r["partition_id"])
+    return done
 
 
-def done_buckets(spark: SparkSession, lineage_path: str, stage: str) -> set[int]:
-    lin = read_lineage(spark, lineage_path)
-    if lin is None:
-        return set()
-    rows = (
-        lin.filter((F.col("stage") == stage) & (F.col("status") == "ok"))
-        .select("partition_id")
-        .distinct()
-        .collect()
-    )
-    return {r["partition_id"] for r in rows}
+#: independent write + lineage-append jobs a bucketed stage commits in
+COMMIT_CHUNKS = 4
 
 
 def run_bucketed_stage(
@@ -75,14 +71,13 @@ def run_bucketed_stage(
     lineage_path: str,
     run_id: str,
     n_buckets: int,
-    resume: bool = True,
-    commit_chunks: int = 4,
+    done: set[int],
 ) -> DataFrame:
     """Write `df` (must carry url_bucket) partitioned by bucket,
-    skipping buckets already recorded ok; append lineage rows.
+    skipping the buckets in `done`; append lineage rows.
     Returns the (full) stage table, read back from storage.
 
-    Pending buckets commit in `commit_chunks` independent jobs, each
+    Pending buckets commit in COMMIT_CHUNKS independent jobs, each
     followed immediately by its own lineage append with real
     per-chunk timestamps and per-bucket row counts (observed on the
     write, not read back) — a kill mid-stage loses at most the
@@ -91,17 +86,15 @@ def run_bucketed_stage(
     not just between stages).  The stage input is persisted across
     the chunk jobs so each chunk re-reads cached partitions instead
     of recomputing the upstream transform; dynamic partition
-    overwrite keeps every per-bucket rewrite idempotent, so a crash
-    between a chunk's write and its lineage append only re-does that
-    chunk."""
-    done = done_buckets(spark, lineage_path, stage) if resume else set()
+    overwrite (set on this writer only) keeps every per-bucket
+    rewrite idempotent, so a crash between a chunk's write and its
+    lineage append only re-does that chunk."""
     pending = [b for b in range(n_buckets) if b not in done]
     if pending:
         from pyspark.storagelevel import StorageLevel
 
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-        per_chunk = max(1, -(-len(pending) // max(1, commit_chunks)))
+        per_chunk = -(-len(pending) // COMMIT_CHUNKS)
         for lo in range(0, len(pending), per_chunk):
             chunk = pending[lo : lo + per_chunk]
             started = datetime.now(timezone.utc)
@@ -110,7 +103,9 @@ def run_bucketed_stage(
             cached.filter(F.col("url_bucket").isin(chunk)).observe(
                 counts,
                 *[F.count_if(F.col("url_bucket") == b).alias(str(b)) for b in chunk],
-            ).write.mode("overwrite").partitionBy("url_bucket").parquet(out_path)
+            ).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("url_bucket").parquet(out_path)
             finished = datetime.now(timezone.utc)
             n = counts.get
             rows = [
@@ -131,16 +126,12 @@ def run_global_stage(
     out_path: str,
     lineage_path: str,
     run_id: str,
-    resume: bool = True,
+    done: set[int],
 ) -> DataFrame:
     """Non-bucketed stage (CC, global dedup): one lineage row with
     partition_id=-1 and the row count observed on the write; skipped
-    entirely when already ok."""
-    if (
-        resume
-        and -1 in done_buckets(spark, lineage_path, stage)
-        and _exists(spark, out_path)
-    ):
+    entirely when `done` holds -1 and the output is stored."""
+    if -1 in done and _exists(spark, out_path):
         return spark.read.parquet(out_path)
     started = datetime.now(timezone.utc)
     count = Observation()

@@ -307,7 +307,7 @@ def test_driver_rows_plan_as_local_relations(spark, stored, tmp_path, monkeypatc
     monkeypatch.setattr(DataFrameWriter, "parquet", spy)
     run_global_stage(
         spark, "g", lambda: spark.range(3), str(tmp_path / "out"),
-        str(tmp_path / "lineage"), "r1",
+        str(tmp_path / "lineage"), "r1", set(),
     )
     assert len(written) == 1 and _local_only(written[0])
 

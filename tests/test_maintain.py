@@ -63,6 +63,7 @@ def test_stream_maintenance_equals_full_rebuild(spark, tmp_path):
     full = build_kg(spark, pages2)
     assert _triples_set(committed) == _triples_set(full.triples)
     assert committed.count() == full.triples.count()
+    assert meta1["triples"] == committed.count()
 
     # fingerprint state covers every url ever seen
     fp = spark.read.parquet(os.path.join(state, f"v{v1}", "fingerprints"))

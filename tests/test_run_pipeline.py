@@ -11,6 +11,7 @@ import os
 from collections import Counter
 
 import pytest
+from pyspark.sql import DataFrameReader
 
 from ferenda_spark.config import PipelineConfig
 from ferenda_spark.pipeline import build_kg, incremental_kg, kg_state, run_pipeline
@@ -31,6 +32,7 @@ STAGES = {
     "validate": "warnings",
 }
 BUCKETED = ("extract", "segment", "mentions", "emit")
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
 
 @pytest.fixture(scope="module")
@@ -40,9 +42,18 @@ def pages1(spark):
 
 @pytest.fixture(scope="module")
 def materialized(spark, pages1, tmp_path_factory):
-    """(out_root, run_pipeline result) of the v1 snapshot."""
+    """(out_root, run_pipeline result, the session's partition
+    overwrite mode after the run) of the v1 snapshot, run with that
+    mode set to STATIC."""
     root = str(tmp_path_factory.mktemp("run_pipeline"))
-    return root, run_pipeline(spark, pages1, root, CFG, run_id="r1")
+    prior = spark.conf.get(OVERWRITE_MODE)
+    spark.conf.set(OVERWRITE_MODE, "STATIC")
+    try:
+        rp = run_pipeline(spark, pages1, root, CFG, run_id="r1")
+        mode_after = spark.conf.get(OVERWRITE_MODE)
+    finally:
+        spark.conf.set(OVERWRITE_MODE, prior)
+    return root, rp, mode_after
 
 
 @pytest.fixture(scope="module")
@@ -62,7 +73,7 @@ def _edges(kg) -> Counter:
 
 
 def test_run_pipeline_equals_build_kg(materialized, built):
-    _, rp = materialized
+    _, rp, _ = materialized
     assert tuple(rp.triples.columns) == TRIPLE_COLS
     got = _triples(rp)
     assert sum(got.values()) > 0
@@ -71,7 +82,7 @@ def test_run_pipeline_equals_build_kg(materialized, built):
 
 
 def test_run_pipeline_state_carries_the_tail_tables(pages1, materialized):
-    _, rp = materialized
+    _, rp, _ = materialized
     state = kg_state(pages1, rp)
     for table in (state.labels, state.canon, state.triples, state.edges):
         assert table is not None
@@ -81,7 +92,7 @@ def test_run_pipeline_state_carries_the_tail_tables(pages1, materialized):
 def test_recrawl_over_a_run_pipeline_state_equals_full_rebuild(
     spark, pages1, materialized
 ):
-    _, rp = materialized
+    _, rp, _ = materialized
     pages2 = synth_pages_v2(spark, N, n_new=4, change_every=5, seed=42, cfg=CFG)
     inc, delta_urls = incremental_kg(spark, pages2, kg_state(pages1, rp), CFG)
     full = build_kg(spark, pages2, CFG)
@@ -95,7 +106,7 @@ def test_recrawl_over_a_run_pipeline_state_equals_full_rebuild(
 
 
 def test_lineage_counts_equal_the_stored_tables(spark, materialized):
-    root, _ = materialized
+    root, _, _ = materialized
     lineage = spark.read.parquet(os.path.join(root, "lineage")).collect()
     assert {r["stage"] for r in lineage} == set(STAGES)
     for stage, table in STAGES.items():
@@ -109,10 +120,29 @@ def test_lineage_counts_equal_the_stored_tables(spark, materialized):
         assert got == want, stage
 
 
-def test_noop_rerun_adds_no_lineage_rows(spark, pages1, materialized):
-    root, rp = materialized
+def test_run_pipeline_leaves_the_session_overwrite_mode_alone(materialized):
+    """Dynamic partition overwrite is set on the bucketed writer only.
+    That every bucket survives the chunked overwrites under the STATIC
+    session is checked by test_lineage_counts_equal_the_stored_tables."""
+    _, _, mode_after = materialized
+    assert mode_after == "STATIC"
+
+
+def test_noop_rerun_adds_no_lineage_rows(spark, pages1, materialized, monkeypatch):
+    root, rp, _ = materialized
     lin = os.path.join(root, "lineage")
     before = spark.read.parquet(lin).count()
+    read = []
+    real_parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        read.extend(paths)
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
     again = run_pipeline(spark, pages1, root, CFG, run_id="r2")
+    monkeypatch.undo()
+    # the rerun decides what to skip from one lineage read
+    assert read.count(lin) == 1
     assert spark.read.parquet(lin).count() == before
     assert _triples(again) == _triples(rp)

@@ -16,6 +16,7 @@ from ferenda_spark.operators.query import decorate_entries, entry_mismatches
 from ferenda_spark.streaming.resume import (
     LINEAGE_SCHEMA,
     build_stats,
+    done_parts,
     run_bucketed_stage,
     run_global_stage,
     status_report,
@@ -138,9 +139,7 @@ def test_bucketed_stage_per_chunk_commit_and_partial_resume(spark):
                 spark.createDataFrame(rows, ["url", "marker"]), nb
             )
 
-        run_bucketed_stage(
-            spark, "s", data("v1"), out, lin, "r1", nb, resume=True, commit_chunks=4
-        )
+        run_bucketed_stage(spark, "s", data("v1"), out, lin, "r1", nb, set())
         lineage = spark.read.parquet(lin)
         # per-chunk commits leave >1 distinct (started, finished) group
         n_groups = lineage.select("started", "finished").distinct().count()
@@ -158,7 +157,7 @@ def test_bucketed_stage_per_chunk_commit_and_partial_resume(spark):
         # resume with CHANGED data: committed buckets must be reused
         # (still v1), only the uncommitted ones recompute (v2)
         run_bucketed_stage(
-            spark, "s", data("v2"), out, lin, "r2", nb, resume=True, commit_chunks=4
+            spark, "s", data("v2"), out, lin, "r2", nb, done_parts(spark, lin)["s"]
         )
         got = spark.read.parquet(out).select("url_bucket", "marker").distinct().collect()
         for r in got:
@@ -190,7 +189,8 @@ def test_global_stage_crash_between_write_and_lineage(spark):
         build("v1")().write.mode("overwrite").parquet(out)
         assert not os.path.exists(lin)
 
-        got = run_global_stage(spark, "g", build("v2"), out, lin, "r2", resume=True)
+        done = done_parts(spark, lin).get("g", set())
+        got = run_global_stage(spark, "g", build("v2"), out, lin, "r2", done)
         # re-ran (idempotent overwrite), did not trust the orphan output
         assert calls == ["v1", "v2"]
         assert [r["marker"] for r in got.collect()] == ["v2"]
@@ -200,6 +200,7 @@ def test_global_stage_crash_between_write_and_lineage(spark):
         ]
 
         # lineage now ok -> a further resume skips the builder entirely
-        got2 = run_global_stage(spark, "g", build("v3"), out, lin, "r3", resume=True)
+        done = done_parts(spark, lin)["g"]
+        got2 = run_global_stage(spark, "g", build("v3"), out, lin, "r3", done)
         assert calls == ["v1", "v2"]
         assert [r["marker"] for r in got2.collect()] == ["v2"]
